@@ -379,7 +379,7 @@ object Dedup {
    * shingle the corpus once (caller-owned caching, the [[dupGroups]]
    * convention).
    *
-   * EAGER EXECUTION NOTE (ADVICE r12, the ivfRankedFit convention):
+   * EAGER EXECUTION NOTE (ADVICE r12, the SparseAnn.ivfRanked convention):
    * [[jaccardForBySh]]'s auto prune gate runs a 1-row aggregate+collect
    * over the (capped) shingle table at DataFrame-CONSTRUCTION time, so
    * calling this executes one corpus pass immediately — and with the
@@ -959,8 +959,11 @@ object Dedup {
    * already pruned — is handled in-kernel since r14 by the
    * heavy-shingle split below: head shingles are counted candidate-first
    * (the [[jaccardFor]] shape), everything else keeps the skinny
-   * self-join. Both verifications are exact; the split is bytes, not
-   * answers.
+   * self-join. Both verifications give every distinct candidate pair
+   * its exact Jaccard. The prune branch drops duplicate candidate rows
+   * first, because its candidate-first heavy count would count one
+   * overlap per copy; it therefore emits one row per distinct pair,
+   * where the unpruned branch emits one row per candidate row.
    */
   def jaccardForBySh(pairs0: DataFrame, sh: DataFrame,
       pruneCandidateDocs: Option[Boolean] = None): DataFrame = {
@@ -1005,10 +1008,13 @@ object Dedup {
         .collect()(0)
       r.getLong(0) * r.getLong(0) > r.getLong(1)
     }
-    // in the prune branch the candidate table is consumed twice (the
-    // doc semi-join + the final inner join) — pin it so the candidate
-    // join runs once; unpruned it is consumed once, no pin needed
-    val pairs = if (doPrune) pairs0.localCheckpoint() else pairs0
+    // in the prune branch the candidate table is consumed three times
+    // (the doc semi-join, the heavy count, the final inner join) — pin
+    // it so the candidate join runs once, deduplicated because the heavy
+    // count multiplies by each copy of a pair; unpruned it is consumed
+    // once, no pin needed
+    val pairs =
+      if (doPrune) pairs0.dropDuplicates("doc0", "doc1").localCheckpoint() else pairs0
     val shp =
       if (doPrune) {
         val candDocs = pairs.select(col("doc0").as("doc_id"))

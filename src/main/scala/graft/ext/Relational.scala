@@ -1154,7 +1154,7 @@ object Relational {
    * added work (no probe, no collect — the base contract query and the
    * capped twin keep their exact r12 plans).
    *
-   * EAGER EXECUTION NOTE (the ivfRankedFit convention): on the split
+   * EAGER EXECUTION NOTE (the SparseAnn.ivfRanked convention): on the split
    * path this runs the basket-size probe at DataFrame-construction time
    * and pins the retained postings + candidate pairs with eager
    * localCheckpoints (each is consumed by 2–3 downstream branches).

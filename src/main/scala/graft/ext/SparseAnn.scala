@@ -42,56 +42,85 @@ import graft.core.{CosineAnalysis, MatrixElement}
  *
  * THE `pin` PARAMETER (every public entry point): a function that pins
  * a corpus-sized intermediate and MUST RETURN A NEW DataFrame —
- * `_.localCheckpoint()` is the intended (and contract-used) value. The
- * IVF fit detects "caller didn't pin" by reference identity and then
- * checkpoints internally (its driver-side Lloyd collects would
- * otherwise re-execute the normalize chain per round), so a pin that
- * mutates and returns the SAME object (`_.persist()` / `_.cache()`
- * return `this`) is indistinguishable from identity: the caller's
- * persist stays, but an eager localCheckpoint is layered on top of it
- * (ADVICE r12). Pass a checkpoint-style pin, or `identity` to accept
- * the internal one.
+ * `_.localCheckpoint()` is the intended (and contract-used) value. Each
+ * call builds ONE per-vector table ([[vectorTable]]: coord-sorted
+ * entries, norm, hashed features) and pins it — with `pin`, or with an
+ * internal eager `localCheckpoint` when `pin` returns the object it was
+ * given, because the fit's driver-side actions would otherwise each
+ * re-run the normalize chain. Reference identity is the only test, so a
+ * pin that mutates and returns `this` (`_.persist()` / `_.cache()`) is
+ * treated as no pin: the caller's persist stays and the checkpoint is
+ * layered on top of it. Pass a checkpoint-style pin, or `identity` to
+ * accept the internal one. `pin` itself also pins the two model-routed
+ * tables: the ranked list distances and (top-k, prediction) the list
+ * membership.
+ *
+ * EAGER ACTIONS: the fit runs when an entry point is CALLED, not when
+ * its result is first acted on. With a checkpoint pin the actions are
+ * the table pin, its count (AutoLists only), one seed collect, one
+ * codebook collect per Lloyd round after the first, the ranked pin and
+ * the membership pin — `5 + (iters − 1)` for [[topSimilarIvf]],
+ * pinned by SparseAnnSpec. All of them read the pinned table; only the
+ * three pins are corpus-sized.
  */
 object SparseAnn {
 
   /** The (vector, coord, nv) projection of the normalized matrix — the
-    * table every stage of the candidate pipeline consumes. */
+    * input of [[vectorTable]] and of the pair-join reference. */
   private[ext] def normTable(analysis: CosineAnalysis, matrix: Dataset[MatrixElement]): DataFrame =
     analysis.normalize(matrix).toDF().select(
       col(analysis.axis).as("vector"),
       col(analysis.predictionAxis).as("coord"),
       col("normalized_value").as("nv"))
 
+  /** Sums the runs of equal `j` in a (j, nv)-sorted entry array, in
+    * array order — so every hashed value is bit-reproducible. */
+  private val sumRuns = udf { (jv: Seq[org.apache.spark.sql.Row]) =>
+    val out = Vector.newBuilder[(Long, Double)]
+    var i = 0
+    while (i < jv.length) {
+      val j = jv(i).getLong(0)
+      var hv = 0.0
+      while (i < jv.length && jv(i).getLong(0) == j) { hv += jv(i).getDouble(1); i += 1 }
+      out += ((j, hv))
+    }
+    out.result()
+  }
+
   /**
-   * 1e-6-snapped exact dense cosine for a prepared (vector0 > vector1)
-   * candidate-pair table, symmetrized into (vector, neighbor, s) rows —
-   * the reference verification tail of the IVF candidate route
-   * ([[candidateSimsIvfReference]]). Candidates with
-   * no shared coordinate get similarity 0.0 (dense semantics); pairs the
-   * candidate rule never emits are not considered at all.
+   * THE per-vector table of the IVF route, built by ONE `groupBy("vector")`
+   * over the normalized rows. Each row holds:
+   *   - `cv`: the coord-sorted (coord, nv) entries — [[graft.functions
+   *     .SparseDot]]'s input, whose ascending-coord accumulation makes a
+   *     pair's dot independent of argument order;
+   *   - `mod`: the vector's norm;
+   *   - `hj`: the j-sorted feature-hashed entries, h(v)_j = Σ nv over the
+   *     coords with [[ivfDimSql]] = j ([[TextAnalysis.featureHash]]'s
+   *     trick), summed in (j, nv) order — the ascending-j form the
+   *     Lloyd scorer folds over.
+   * Every later stage (list count, seeds, Lloyd rounds, exact
+   * re-scoring, prediction cells) reads this table, so a caller pins it
+   * once and no stage regroups the COO rows.
    */
-  /**
-   * GROUP-LOCAL exact re-scoring for the IVF route (r10, after the sfx10
-   * disk-fill): [[exactSims]] re-scores candidates through a
-   * coordinate-keyed join whose exchange is |pairs| × vector density —
-   * measured 8.6 GB of shuffle at sfx1 (~19 KB per pair on the ~600-
-   * nonzero supplier matrix) and a projected ~86 GB at sfx10, which
-   * filled the box's disk and killed the run. The IVF route's groups are
-   * OCCUPANCY-BOUNDED (assigned ≤ maxOcc after the sub-split; probers of
-   * a sub-bucket ≈ maxOcc·nprobe on a collapsed list), so instead each
-   * vector's coordinate map ships ONCE PER PROBED LIST (≤ 1 + nprobe
-   * copies, vs once per candidate pair ≈ maxOcc·(1+nprobe)/2 copies —
-   * ~40× fewer bytes at the contract constants), pairs materialize as a
-   * salted equi-join on the (cid, sub, prober-chunk) key, and the dot
-   * product is [[graft.functions.SparseDot]]'s codegen'd two-pointer
-   * merge over the coord-sorted entry arrays — O(d0+d1) per pair,
-   * accumulated in ascending coord order, so both orientations of a
-   * pair — and re-derivations in different groups — produce
-   * bit-identical sums and the pair-level distinct dedupes exactly.
-   * Candidate set and similarity values are IDENTICAL to [[exactSims]]
-   * over [[ivfCandidatesTail]] (spec-pinned); only the physical shape
-   * changes.
-   */
+  private[ext] def vectorTable(n: DataFrame, dim: Int = IvfDim): DataFrame = {
+    require(dim >= 1, s"dim must be positive (dim=$dim)")
+    n.groupBy("vector").agg(
+        sort_array(collect_list(struct(col("coord"), col("nv")))).as("cv"),
+        sqrt(sum(col("nv") * col("nv"))).as("mod"),
+        sort_array(collect_list(struct(
+          expr(ivfDimSql("coord", dim)).cast("long").as("j"), col("nv")))).as("jv"))
+      .select(col("vector"), col("cv"), col("mod"),
+        sumRuns(col("jv")).cast("array<struct<j:bigint,hv:double>>").as("hj"))
+  }
+
+  /** [[vectorTable]] pinned by `pin`, or by an eager `localCheckpoint`
+    * when `pin` hands back the same object (see the object scaladoc). */
+  private def pinnedTable(n: DataFrame, pin: DataFrame => DataFrame, dim: Int): DataFrame = {
+    val t = vectorTable(n, dim)
+    val p = pin(t)
+    if (p eq t) t.localCheckpoint() else p
+  }
+
   /** Per-(cid, sub) PROBER-chunk width for [[exactSimsLocal]]'s grouped
     * rows: bounds every collected group at ~(cap + maxOcc) vector maps
     * even when a SMALL list is probed by most of the corpus (the
@@ -105,36 +134,38 @@ object SparseAnn {
   val PairGroupCap = 96
   private val PairChunkSalt = 77377L
 
-  private[ext] def exactSimsLocal(memb: DataFrame, n: DataFrame,
+  /**
+   * GROUP-LOCAL exact re-scoring for the IVF route: each vector's entry
+   * array ships once per probed list (≤ 1 + nprobe copies) instead of
+   * once per candidate pair (≈ maxOcc·(1+nprobe)/2 copies), because the
+   * route's (cid, sub) groups are occupancy-bounded. Pairs materialize
+   * as a salted equi-join on the (cid, sub, prober-chunk) key, and the
+   * dot is [[graft.functions.SparseDot]]'s two-pointer merge over the
+   * coord-sorted `cv` arrays of `table` ([[vectorTable]]) — so both
+   * orientations of a pair, and re-derivations in different groups,
+   * produce bit-identical sums and the pair-level distinct dedupes
+   * exactly. Candidate set and values are IDENTICAL to [[exactSims]]
+   * over [[ivfCandidatesTail]] (spec-pinned); only the physical shape
+   * differs.
+   */
+  private[ext] def exactSimsLocal(memb: DataFrame, table: DataFrame,
       cap: Int = PairGroupCap): DataFrame = {
     require(cap >= 1)
-    graft.functions.GraftFunctions.register(n.sparkSession)
-    // coord-SORTED entry arrays: sparse_dot's two-pointer merge needs
-    // them ordered, and the ascending-coord accumulation order makes the
-    // dot argument-order-independent (the distinct() below relies on it)
-    val arr = n.groupBy("vector").agg(
-      sort_array(collect_list(struct(col("coord"), col("nv")))).as("cv"),
-      sqrt(sum(col("nv") * col("nv"))).as("mod"))
-    val m2 = memb.join(arr, "vector")
+    graft.functions.GraftFunctions.register(table.sparkSession)
+    val m2 = memb.join(table.select("vector", "cv", "mod"), "vector")
     val grpN = m2.groupBy("cid", "sub").agg(count(lit(1)).as("grp_n"))
     val withN = m2.join(grpN, Seq("cid", "sub"))
       .withColumn("npb", (expr(s"CAST((grp_n - 1) DIV $cap AS BIGINT)") + lit(1L)))
-    // FULL-STRING id fold (r11): tokenValue's probe classes collapsed
-    // 100k integer ids into ~9k groups and broke the chunk cap — see
-    // TextHash.charFold's scaladoc and the IvfDiag measurements
+    // full-string id fold: probe-based tokenValue collapses integer ids
+    // into collision classes and breaks the chunk cap (TextHash.charFold)
     val chunkHash = expr(TextHash.avalancheSql(
       TextHash.charFold("vector"), PairChunkSalt))
-    // prober role: every membership row, hashed into ONE chunk of its
-    // group; assigned role: replicated into EVERY chunk so each prober
-    // chunk sees the full (occupancy-capped) assigned set
-    // pair generation is a plain EQUI-JOIN on the salted group key —
-    // prober side hashed into one chunk, assigned side replicated into
-    // every chunk (the salted-join pattern: a group probed by most of
-    // the corpus spreads across ~probers/cap tasks instead of one). No
-    // collect_list anywhere: a grouped-row spelling was measured 7.7×
-    // SLOWER at sfx1 (1512 s) because the generate copied the whole
-    // member array once per crossed row (~4 MB × |group|² memcpy on
-    // 600-coord vectors); the join streams skinny pair rows instead.
+    // the salted-join pattern: every membership row probes from ONE
+    // chunk of its group, assigned rows replicate into EVERY chunk, so a
+    // group probed by most of the corpus spreads across ~probers/cap
+    // tasks. Skinny pair rows stream through the join; a grouped-row
+    // (collect_list + generate) spelling copied the member array once
+    // per crossed row and measured 7.7× slower at sfx1.
     val probers = withN
       .withColumn("pchunk", chunkHash % col("npb"))
       .select(col("cid"), col("sub"), col("pchunk"),
@@ -163,6 +194,14 @@ object SparseAnn {
         col("p.s").as("s"))
   }
 
+  /**
+   * 1e-6-snapped exact dense cosine for a prepared (vector0 > vector1)
+   * candidate-pair table, symmetrized into (vector, neighbor, s) rows —
+   * the pair-join reference tail of the IVF route
+   * ([[candidateSimsIvfReference]]). Candidates with no shared
+   * coordinate get similarity 0.0 (dense semantics); pairs the
+   * candidate rule never emits are not considered at all.
+   */
   private[ext] def exactSims(cands: DataFrame, n: DataFrame): DataFrame = {
     val mods = n.groupBy("vector")
       .agg(sqrt(sum(col("nv") * col("nv"))).as("mod"))
@@ -283,49 +322,46 @@ object SparseAnn {
 
   /**
    * IVF-routed candidate pairs for the sparse cosine core — the route
-   * for the regime where sign-LSH measurably LOSES (dense-support,
-   * positively-correlated matrices; see the object scaladoc and
-   * bench_sf1.json): every supplier-style vector is near-parallel to
-   * the mean, so sign bits collapse into few buckets, but k-means on
-   * the hashed features still partitions the corpus by its actual
-   * coarse geometry (VERDICT r8 ask #4).
+   * for dense-support, positively-correlated matrices where sign-LSH
+   * measurably loses (see the object scaladoc and bench_sf1.json):
+   * every supplier-style vector is near-parallel to the mean, so sign
+   * bits collapse into few buckets, but k-means on the hashed features
+   * still partitions the corpus by its actual coarse geometry.
    *
    *   1. Feature-hash the normalized sparse vectors to `dim` fixed
-   *      dimensions ([[TextAnalysis.featureHash]]'s trick on the COO
-   *      rows: h(v)_j = Σ_{coord: hash(coord)=j} nv) — one (vector,
-   *      j)-keyed aggregate, dot products preserved in expectation.
-   *   2. Fit Lloyd k-means on the hashed vectors in SPARSE form:
-   *      d²(v, c) = ‖v‖² + ‖c‖² − 2⟨v, c⟩ with the dot ridden on a
-   *      j-keyed equi-join against the densified (lists × dim)
-   *      broadcast codebook — no N×k cross join, no dense N-row
-   *      materialization. Seeds = the `lists` lexicographically
-   *      smallest vector ids (engine-portable string order); centroid
-   *      components and distances snap per round (the
-   *      [[Embeddings.kMeansAssign]] determinism convention).
+   *      dimensions — the `hj` column of the pinned [[vectorTable]];
+   *      dot products are preserved in expectation.
+   *   2. Fit Lloyd k-means on the hashed vectors ([[ivfRanked]]): a
+   *      driver-side model-sized codebook per round, every vector
+   *      scoring every live list in one compiled projection. Seeds =
+   *      the `lists` lexicographically smallest vector ids
+   *      (engine-portable string order); centroid components and
+   *      distances snap per round (the [[Embeddings.kMeansAssign]]
+   *      determinism convention).
    *   3. Candidates = pairs where either side's assigned list is in the
    *      other side's `nprobe` nearest lists — the [[Embeddings
-   *      .ivfKMeansTopK]] probe rule made symmetric — then EXACT sparse
-   *      cosine only on candidates ([[exactSims]], shared with the LSH
-   *      route).
+   *      .ivfKMeansTopK]] probe rule made symmetric, occupancy-capped by
+   *      sub-splits — then EXACT sparse cosine only on candidates,
+   *      inside each list group ([[exactSimsLocal]]).
    *
-   * Scale shape: the hashed table is corpus-linear with ≤ dim rows per
-   * vector; every per-round structure the fit shuffles is keyed by j or
-   * cid (model-sized broadcasts back); the candidate surface is
-   * Σ_list C(occupancy, 2)-bounded like any IVF, and the expensive
+   * Scale shape: the table is corpus-linear; every per-round structure
+   * the fit shuffles is keyed by (cid, j) (model-sized); the candidate
+   * surface is Σ_list C(occupancy, 2)-bounded like any IVF, and the
    * exact-cosine verification touches candidates only.
    */
   def candidateSimsIvf(analysis: CosineAnalysis, matrix: Dataset[MatrixElement],
       pin: DataFrame => DataFrame = identity, lists: Int = AutoLists,
       iters: Int = IvfIters, nprobe: Int = IvfNprobe,
-      dim: Int = IvfDim, maxOcc: Int = ListOccupancy): DataFrame = {
-    val n = pin(normTable(analysis, matrix))
-    // the membership table feeds one group-local scorer (pinned so the
-    // Lloyd routing runs once); scoring ships each vector once per
-    // probed list, never once per pair — see exactSimsLocal
-    exactSimsLocal(
-      pin(ivfMembershipTail(ivfRanked(n, pin, lists, iters, nprobe, dim),
-        nprobe, maxOcc)), n)
-  }
+      dim: Int = IvfDim, maxOcc: Int = ListOccupancy): DataFrame =
+    ivfSims(pinnedTable(normTable(analysis, matrix), pin, dim),
+      pin, lists, iters, nprobe, dim, maxOcc)
+
+  /** Exact similarities of the IVF candidates over a pinned table: the
+    * membership is pinned so the Lloyd routing runs once. */
+  private def ivfSims(table: DataFrame, pin: DataFrame => DataFrame, lists: Int,
+      iters: Int, nprobe: Int, dim: Int, maxOcc: Int): DataFrame =
+    exactSimsLocal(pin(ivfMembershipTail(
+      ivfRanked(table, pin, lists, iters, nprobe, dim), nprobe, maxOcc)), table)
 
   /** [[candidateSimsIvf]] through the ORIGINAL pair-keyed coordinate
     * join ([[exactSims]] over [[ivfCandidatesTail]]) — retained as the
@@ -337,93 +373,54 @@ object SparseAnn {
       lists: Int = AutoLists, iters: Int = IvfIters, nprobe: Int = IvfNprobe,
       dim: Int = IvfDim, maxOcc: Int = ListOccupancy): DataFrame = {
     val n = pin(normTable(analysis, matrix))
-    exactSims(pin(ivfCandidates(n, pin, lists, iters, nprobe, dim, maxOcc)), n)
+    val ranked = ivfRanked(pinnedTable(n, pin, dim), pin, lists, iters, nprobe, dim)
+    exactSims(pin(ivfCandidatesTail(ranked, nprobe, maxOcc)), n)
   }
 
-  /** The (vector0 > vector1) IVF candidate pairs from a prepared
-    * normalized table — [[candidateSimsIvf]]'s routing stage. */
-  private def ivfCandidates(n: DataFrame, pin: DataFrame => DataFrame,
-      lists0: Int, iters: Int, nprobe: Int, dim: Int,
-      maxOcc: Int = ListOccupancy): DataFrame = {
-    require(maxOcc >= 1)
-    ivfCandidatesTail(ivfRanked(n, pin, lists0, iters, nprobe, dim),
-      nprobe, maxOcc)
-  }
-
-  /** The Lloyd fit proper (seeds → `iters` rounds → final snapped
-    * distances, ranked per vector). */
   /** Live-list codebook row: id, ‖c‖² (ascending-j sum), dense
     * components. Model-sized (≤ lists × dim doubles) — the sanctioned
     * driver-side model table, like k-means centroids / LR weights. */
   private final case class CbRow(cid: Long, c2: Double, c: Seq[Double])
 
-  private def ivfRankedFit(n: DataFrame, pin: DataFrame => DataFrame,
-      lists: Int, iters: Int, dim: Int, topN: Int): DataFrame = {
-    // EAGER EXECUTION NOTE (ADVICE r11): the fit below runs driver-side
-    // collects (seed ids, seed rows, one snapped codebook per round) at
-    // DataFrame-CONSTRUCTION time, so every public IVF entry point
-    // (topSimilarIvf / predictMissingIvf / listOccupancyIvf) executes
-    // work when CALLED, not when its result is first acted on. With the
-    // default `pin = identity` each of those collects would re-execute
-    // the normalize → feature-hash chain from the source scan — so when
-    // the caller didn't pin, the corpus-sized h/hArr tables are
-    // localCheckpointed here (ipin). Callers passing their own pin
-    // (the contract entries pass `_.localCheckpoint()`) keep it.
-    // CONTRACT (ADVICE r12): a caller-supplied pin must RETURN A NEW
-    // DataFrame (localCheckpoint-style). The no-pin detection below is
-    // reference identity, and Spark's `persist()`/`cache()` return
-    // `this` — such a pin is indistinguishable from identity, so a
-    // caching caller additionally pays the eager localCheckpoint here.
-    // Documented on every public `pin` parameter rather than sniffed
-    // further, because there is no reliable way to tell "identity"
-    // from "same-object mutation" at this layer.
-    val ipin: DataFrame => DataFrame = df => {
-      val p = pin(df)
-      if (p eq df) df.localCheckpoint() else p
-    }
-    val h = ipin(n.groupBy(col("vector"),
-        expr(ivfDimSql("coord", dim)).cast("long").as("j"))
-      .agg(sum("nv").as("hv")))
-    // ONE corpus-sized structure for the whole fit: each vector's hashed
-    // features as a j-SORTED sparse array (ascending-j folds make every
-    // dot/norm sum order-deterministic before the 1e-6 snap)
-    val hArr = ipin(h.groupBy("vector").agg(
-      sort_array(collect_list(struct(col("j"), col("hv")))).as("hj")))
-    // THE r11 SCALING FIX (VERDICT r10 What's-wrong #4 / ask #2): the
-    // previous spelling scored assignment through a j-keyed join of the
-    // corpus against a DENSIFIED broadcast codebook — V·nnz·L
-    // intermediate rows per round (3.3 BILLION at sfx10, where L hits
-    // the 1024-list ladder cap) followed by a V·L-row groupBy AND a
-    // V·L-row localCheckpoint of the ranked distance table. That made
-    // the FIT superlinear across the sfx1→sfx10 decade (measured 18 s →
-    // 456 s = 25× for 10× data on cosine_ivf_occupancy, which runs
-    // nothing but this fit; L doubling 512→1024 accounts for 20× of
-    // it). The codebook is MODEL-sized (≤ 1024 lists × 32 dims), so it
-    // is collected to the driver each round (the k-means-centroid
-    // convention) and every vector scores ALL live lists in ONE
-    // zero-exchange projection — transform over the codebook literal,
-    // ascending-j aggregate folds for the dot — keeping only the
-    // top-`topN` (d2, cid) pairs via array_sort (struct order =
-    // (d2 ASC, cid ASC), the exact Window tie-break it replaces). Per
-    // round the cluster now moves O(V·nnz·L) fused arithmetic and
-    // ZERO shuffled rows, and the ranked table is V·topN instead of
-    // V·L. Distances, ranks, and dead-list semantics (a list that
-    // loses all members drops out of scoring) are SNAP-identical to
-    // the join spelling: the rewrite changes floating-point summation
-    // order (ascending-j sequential fold here vs Spark's partial-
-    // aggregation order there), and agreement — with the old spelling
-    // and with the DuckDB oracle — rests on the 1e-6 grid's 0.50001
-    // snap guard absorbing that reorder noise (ADVICE r11), not on
-    // bit-identical arithmetic.
+  /**
+   * The Lloyd fit and final ranked list distances over a pinned
+   * [[vectorTable]] — (vector, cid, d2, rn), rn the per-vector
+   * nearest-list rank, truncated to the probe depth (every consumer
+   * filters rn <= nprobe or rn = 1). Shared by the candidate stage and
+   * the occupancy audit. AutoLists sizes the list count from the
+   * table's `count()` ([[deriveLists]]), the dedup family's self-sizing
+   * convention.
+   *
+   * The codebook is MODEL-sized (≤ 4096 lists × dim), so each round it
+   * comes back to the driver (the k-means-centroid convention) and
+   * every vector scores ALL live lists in one zero-exchange projection,
+   * keeping only its top-`nprobe` (d2, cid) pairs. A join against a
+   * broadcast codebook instead moves V·nnz·L rows per round and made the
+   * fit superlinear across the sfx1→sfx10 decade. Distances, ranks and
+   * dead-list semantics (a list that loses all members drops out of
+   * scoring) match the DuckDB oracle on the 1e-6 grid: the 0.50001 snap
+   * guard absorbs floating-point summation-order noise, not
+   * bit-identical arithmetic.
+   */
+  private[ext] def ivfRanked(table: DataFrame, pin: DataFrame => DataFrame,
+      lists0: Int, iters: Int, nprobe: Int, dim: Int): DataFrame = {
+    // EAGER EXECUTION NOTE: the count, the seed collect and one codebook
+    // collect per extra round run HERE, at construction — model-sized
+    // actions over the caller-pinned table (see the object scaladoc's
+    // action list); the ranked table is pinned with `pin`
+    val lists = if (lists0 == AutoLists) deriveLists(table.count()) else lists0
+    require(lists >= 2 && iters >= 1 && nprobe >= 1 && nprobe <= lists,
+      s"IVF needs lists >= 2, iters >= 1, 1 <= nprobe <= lists " +
+        s"(lists=$lists, iters=$iters, nprobe=$nprobe)")
+    def cbRow(cid: Long, arr: Array[Double]): CbRow =
+      CbRow(cid, arr.map(c => c * c).sum, arr.toSeq)
     def collectCb(cent: DataFrame): Seq[CbRow] = {
       val m = scala.collection.mutable.Map.empty[Long, Array[Double]]
       cent.collect().foreach { r =>
         m.getOrElseUpdate(r.getLong(0), Array.fill(dim)(0.0))(
           r.getLong(1).toInt) = r.getDouble(2)
       }
-      m.toSeq.sortBy(_._1).map { case (cid, arr) =>
-        CbRow(cid, arr.map(c => c * c).sum, arr.toSeq)
-      }
+      m.toSeq.sortBy(_._1).map { case (cid, arr) => cbRow(cid, arr) }
     }
     // the scoring kernel is a Scala UDF ON PURPOSE (measured): the
     // codebook loop is L×nnz fused double ops per VECTOR — an
@@ -433,6 +430,7 @@ object SparseAnn {
     // loop does the same 164M flops in <1 core-second. The repo's
     // "functions, not UDFs" rule targets corpus-sized per-row paths —
     // this is V-row model scoring where the UDF body IS the kernel.
+    // Output: (vector, hj, cid, d2, rn) for the k nearest lists.
     def scoredDf(cb: Seq[CbRow], k: Int): DataFrame = {
       val cids = cb.map(_.cid).toArray
       val c2s = cb.map(_.c2).toArray
@@ -451,12 +449,10 @@ object SparseAnn {
         var x2 = 0.0
         i = 0
         while (i < n) { x2 += hv(i) * hv(i); i += 1 }
-        // allocation-free top-k selection: materializing + sorting all
-        // L (d2, cid) tuples cost 400M boxed allocations per fit at the
-        // 4096-list ladder top (measured: occupancy fit 40 → 77 s at
-        // sfx10 when the ladder rose) — only the k = nprobe smallest
-        // are ever consumed, so insert into k-sized primitive arrays
-        // with the exact (d2 ASC, cid ASC) Window tie-break instead
+        // allocation-free top-k selection: only the k = nprobe smallest
+        // are ever consumed (sorting all L boxed tuples doubled the fit
+        // at the 4096-list ladder top), so insert into k-sized
+        // primitive arrays with the (d2 ASC, cid ASC) tie-break
         val nL = cids.length
         val kk = math.min(k, nL)
         val outD = new Array[Double](kk)
@@ -486,56 +482,33 @@ object SparseAnn {
         }
         (0 until filled).map(i => (outC(i), outD(i)))
       }
-      hArr.select(col("vector"), posexplode(score(col("hj"))))
-        .select(col("vector"), col("col._1").as("cid"),
+      table.select(col("vector"), col("hj"), posexplode(score(col("hj"))))
+        .select(col("vector"), col("hj"), col("col._1").as("cid"),
           col("col._2").as("d2"), (col("pos") + 1).cast("int").as("rn"))
     }
     // seeds: the `lists` lexicographically smallest vector ids, cid =
     // rank − 1 (model-sized collect; engine-portable string order)
-    val seedIds = h.select("vector").distinct().orderBy("vector")
-      .limit(lists).collect().map(_.getString(0)).toIndexedSeq
-    val seedRank = seedIds.zipWithIndex.toMap
-    var cb: Seq[CbRow] = {
-      val m = seedIds.toArray.map(_ => Array.fill(dim)(0.0))
-      h.where(col("vector").isin(seedIds: _*))
-        .select("vector", "j", "hv").collect()
-        .foreach(r => m(seedRank(r.getString(0)))(r.getLong(1).toInt) = r.getDouble(2))
-      m.zipWithIndex.map { case (arr, cid) =>
-        CbRow(cid.toLong, arr.map(c => c * c).sum, arr.toSeq)
-      }.toSeq
-    }
+    var cb: Seq[CbRow] = table.select("vector", "hj").orderBy("vector")
+      .limit(lists).collect().toSeq.zipWithIndex.map { case (r, cid) =>
+        val arr = Array.fill(dim)(0.0)
+        r.getSeq[org.apache.spark.sql.Row](1)
+          .foreach(e => arr(e.getLong(0).toInt) = e.getDouble(1))
+        cbRow(cid.toLong, arr)
+      }
     for (_ <- 1 until iters) {
-      // M-step stays on the cluster (corpus-sized h ⋈ assignment), then
-      // the model-sized snapped centroid table comes back to the driver
-      val assign = scoredDf(cb, 1).select("vector", "cid")
-      val sizes = assign.groupBy("cid").agg(count(lit(1)).as("cn"))
-      cb = collectCb(h.join(assign, "vector")
-        .groupBy(col("cid"), col("j")).agg(sum("hv").as("sv"))
+      // M-step: each vector's assignment rides its own row next to its
+      // hashed entries, so the centroid sums are one (cid, j) aggregate
+      // over explode(hj) — no corpus join; the model-sized snapped
+      // centroid table comes back to the driver
+      val asg = scoredDf(cb, 1)
+      val sizes = asg.groupBy("cid").agg(count(lit(1)).as("cn"))
+      cb = collectCb(asg.select(col("cid"), explode(col("hj")).as("e"))
+        .groupBy(col("cid"), col("e.j").as("j")).agg(sum("e.hv").as("sv"))
         .join(broadcast(sizes), "cid")
         .select(col("cid"), col("j"),
           snap(col("sv") / col("cn").cast("double")).as("c")))
     }
-    pin(scoredDf(cb, topN))
-  }
-
-  /** The Lloyd fit and final ranked list distances — (vector, cid, d2,
-    * rn) with rn the per-vector nearest-list rank — shared by the
-    * candidate stage and the occupancy audit. AutoLists: ONE driver-side
-    * COUNT over the (ideally pinned) norm table sizes the inverted-list
-    * count with the corpus — the same self-sizing convention as the
-    * dedup family's data-derived band counts. */
-  private[ext] def ivfRanked(n: DataFrame, pin: DataFrame => DataFrame,
-      lists0: Int, iters: Int, nprobe: Int, dim: Int): DataFrame = {
-    val lists =
-      if (lists0 == AutoLists)
-        deriveLists(n.select("vector").distinct().count())
-      else lists0
-    require(lists >= 2 && iters >= 1 && nprobe >= 1 && nprobe <= lists)
-    require(dim >= 1)
-    // ranked output truncated to the probe depth: every consumer filters
-    // rn <= nprobe (membership/candidates) or rn = 1 (occupancy), so
-    // rows past nprobe never influence any contract output
-    ivfRankedFit(n, pin, lists, iters, dim, nprobe)
+    pin(scoredDf(cb, nprobe).drop("hj"))
   }
 
   /**
@@ -549,6 +522,7 @@ object SparseAnn {
    */
   private[ext] def ivfMembershipTail(ranked: DataFrame, nprobe: Int,
       maxOcc: Int): DataFrame = {
+    require(maxOcc >= 1, s"maxOcc must be positive (maxOcc=$maxOcc)")
     val probes = ranked.where(col("rn") <= nprobe)
       .select(col("vector"), col("cid"), (col("rn") === 1).as("is_assigned"))
     val sizes = ranked.where(col("rn") === 1)
@@ -564,6 +538,7 @@ object SparseAnn {
 
   private[ext] def ivfCandidatesTail(ranked: DataFrame, nprobe: Int,
       maxOcc: Int): DataFrame = {
+    require(maxOcc >= 1, s"maxOcc must be positive (maxOcc=$maxOcc)")
     val asg = ranked.where(col("rn") === 1).select("vector", "cid")
     val probes = ranked.where(col("rn") <= nprobe).select("vector", "cid")
     // OCCUPANCY ENFORCEMENT (the hot-key-cap convention: phash
@@ -627,9 +602,9 @@ object SparseAnn {
       pin: DataFrame => DataFrame = identity, lists: Int = AutoLists,
       iters: Int = IvfIters, nprobe: Int = IvfNprobe, dim: Int = IvfDim,
       maxOcc: Int = ListOccupancy): DataFrame = {
-    require(maxOcc >= 1)
-    val n = pin(normTable(analysis, matrix))
-    ivfRanked(n, pin, lists, iters, nprobe, dim)
+    require(maxOcc >= 1, s"maxOcc must be positive (maxOcc=$maxOcc)")
+    ivfRanked(pinnedTable(normTable(analysis, matrix), pin, dim),
+        pin, lists, iters, nprobe, dim)
       .where(col("rn") === 1)
       .groupBy("cid").agg(count(lit(1)).as("occ"))
       .select(col("cid"), col("occ"),
@@ -646,7 +621,7 @@ object SparseAnn {
       k: Int = 5, pin: DataFrame => DataFrame = identity,
       lists: Int = AutoLists, iters: Int = IvfIters, nprobe: Int = IvfNprobe,
       dim: Int = IvfDim, maxOcc: Int = ListOccupancy): DataFrame = {
-    require(k > 0)
+    require(k > 0, s"k must be positive (k=$k)")
     val w = Window.partitionBy("vector")
       .orderBy(col("similarity_value").desc, col("neighbor").asc)
     candidateSimsIvf(analysis, matrix, pin, lists, iters, nprobe, dim, maxOcc)
@@ -670,15 +645,13 @@ object SparseAnn {
       neighbors: Int = 5, pin: DataFrame => DataFrame = identity,
       lists: Int = AutoLists, iters: Int = IvfIters, nprobe: Int = IvfNprobe,
       dim: Int = IvfDim, maxOcc: Int = ListOccupancy): DataFrame = {
-    require(neighbors > 0)
-    val n = pin(normTable(analysis, matrix))
-    val sym = exactSimsLocal(
-      pin(ivfMembershipTail(ivfRanked(n, pin, lists, iters, nprobe, dim),
-        nprobe, maxOcc)), n).where(col("s") > 0.0)
+    require(neighbors > 0, s"neighbors must be positive (neighbors=$neighbors)")
+    val t = pinnedTable(normTable(analysis, matrix), pin, dim)
+    val sym = ivfSims(t, pin, lists, iters, nprobe, dim, maxOcc).where(col("s") > 0.0)
     val w = Window.partitionBy("vector").orderBy(col("s").desc, col("neighbor").asc)
     val top = sym.withColumn("rn", row_number().over(w)).where(col("rn") <= neighbors)
-    val cells = n.select(col("vector").as("neighbor"),
-      col("coord"), col("nv"))
+    val cells = t.select(col("vector").as("neighbor"), explode(col("cv")).as("e"))
+      .select(col("neighbor"), col("e.coord").as("coord"), col("e.nv").as("nv"))
     val contrib = top.join(cells, "neighbor")
       .groupBy(col("vector"), col("coord"))
       .agg((sum(col("s") * col("nv")) / sum(col("s"))).as("predicted_value"))

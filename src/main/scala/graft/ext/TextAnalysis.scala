@@ -2595,7 +2595,7 @@ object TextHash {
    * vocabularies but collapses INTEGER-STRING id spaces into ~9k
    * collision classes — at 100k sequential ids every class holds ~11
    * ids, so a `hash(id) % n_sub` sub-split degrades into ~30× hot
-   * groups (measured by IvfDiag: max assigned 977 against the 32 cap,
+   * groups (measured at sfx10: max assigned 977 against the 32 cap,
    * pair surface 55× for 10× data). The fold reads EVERY character, so
    * ids are injective into [0, M) up to hash-width limits. Spark
    * spelling (SQL lambda fold; each step keeps acc < M before the ×31,

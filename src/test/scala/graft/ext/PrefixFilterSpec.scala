@@ -141,18 +141,14 @@ class PrefixFilterSpec extends SparkSpec {
     viaPrefix.foreach { case (k, v) => assertApprox(v, exhaustive(k)) }
   }
 
-  test("heavy-shingle split verification is exact on a planted df-head") {
-    // r14: jaccardForBySh's prune branch splits the verify by shingle
-    // weight (heavy iff df² > Σdf) — this fixture makes the split's
-    // three row classes all non-empty and checks byte-equality with the
-    // pair-first reference on a candidate list that includes them:
-    //   - docs 0/1 share ONLY heavy shingles (i must come from the
-    //     candidate-first branch alone — the full_outer's right side),
-    //   - docs 2/3 share ONLY light shingles (left side alone),
-    //   - docs 4/5 share both (the coalesce-sum),
-    //   - docs 6/7 share nothing (no row in either spelling).
-    // Heavy head: 3 shingles (900, 901, 902) in EVERY doc of a 40-doc
-    // chorus → df = 44-ish, Σdf ≈ 40·13 + extras, so df² > Σdf fires.
+  /** The df-headed shingle table of the heavy-split tests. Heavy head:
+    * 3 shingles (900, 901, 902) in EVERY doc of a 40-doc chorus → df =
+    * 44-ish, Σdf ≈ 40·13 + extras, so df² > Σdf fires. Planted pairs:
+    *   - docs 0/1 share ONLY heavy shingles,
+    *   - docs 2/3 share ONLY light shingles,
+    *   - docs 4/5 share both,
+    *   - docs 6/7 share nothing. */
+  private lazy val plantedHead = {
     val chorus = (10 until 50).map { d =>
       d.toLong -> ((900L to 902L) ++ (1L to 10L).map(_ + 1000L * d))
     }
@@ -165,8 +161,21 @@ class PrefixFilterSpec extends SparkSpec {
       5L -> ((900L to 902L) ++ Seq(7000L, 7002L)),
       6L -> Seq(8000L, 8001L),                   // nothing with 7
       7L -> Seq(8100L, 8101L))
-    val sh = (chorus ++ planted).flatMap { case (d, ss) => ss.map(d -> _) }
+    (chorus ++ planted).flatMap { case (d, ss) => ss.map(d -> _) }
       .toDF("doc_id", "sh").localCheckpoint()
+  }
+
+  test("heavy-shingle split verification is exact on a planted df-head") {
+    // r14: jaccardForBySh's prune branch splits the verify by shingle
+    // weight (heavy iff df² > Σdf) — this fixture makes the split's
+    // three row classes all non-empty and checks byte-equality with the
+    // pair-first reference on a candidate list that includes them:
+    //   - docs 0/1 share ONLY heavy shingles (i must come from the
+    //     candidate-first branch alone — the full_outer's right side),
+    //   - docs 2/3 share ONLY light shingles (left side alone),
+    //   - docs 4/5 share both (the coalesce-sum),
+    //   - docs 6/7 share nothing (no row in either spelling).
+    val sh = plantedHead
     // sanity: the head really is heavy under the split's own rule
     val postings = sh.count()
     val maxDf = sh.groupBy("sh").count().agg(org.apache.spark.sql.functions.max("count"))
@@ -191,5 +200,26 @@ class PrefixFilterSpec extends SparkSpec {
     assertApprox(m((2L, 3L)), 3.0 / 5)
     assertApprox(m((4L, 5L)), 4.0 / 6)
     assert(!m.contains((6L, 7L)))
+  }
+
+  test("heavy-shingle split verification ignores duplicated candidate rows") {
+    // the prune branch counts heavy overlaps candidate-first, so a pair
+    // listed twice must not count its heavy shingles twice: duplicated
+    // input gives every pair the same Jaccard as deduplicated input, in
+    // both forced modes. The chorus pairs keep every chorus doc through
+    // the candidate-doc prune, so the head stays heavy (df² > Σdf) on
+    // the pruned table and the candidate-first count really runs.
+    val sh = plantedHead
+    val once = Seq((0L, 1L), (2L, 3L), (4L, 5L), (6L, 7L), (0L, 2L)) ++
+      (10L until 50L by 2L).map(d => (d, d + 1))
+    val reference = Dedup.jaccardFor(once.toDF("doc0", "doc1"), sh)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val twice = (once ++ once.take(3) ++ once.takeRight(2)).toDF("doc0", "doc1")
+    for (forced <- Seq(Some(true), Some(false), None)) {
+      val got = Dedup.jaccardForBySh(twice, sh, forced)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+      assert(got.toMap == reference, s"prune=$forced")
+      assert(got.forall { case (k, v) => v == reference(k) }, s"prune=$forced")
+    }
   }
 }

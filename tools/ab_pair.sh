@@ -32,7 +32,7 @@ for rep in $(seq 1 "$REPS"); do
     [ "$QUERIES" != ALL ] && ONLY_ENV=(SPARK_GRAFT_BENCH_ONLY="$QUERIES")
     # shellcheck disable=SC2086
     env SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_BENCH_REPS=1 \
-    "${ONLY_ENV[@]}" \
+    ${ONLY_ENV[@]+"${ONLY_ENV[@]}"} \
     SPARK_GRAFT_BENCH_OUT="$OUTDIR/${side}_$rep.json" \
     java $JFLAGS -cp "$CLASSES:/opt/spark/jars/*" graft.Bench \
       > "$OUTDIR/${side}_$rep.log" 2>&1 || echo "[ab] $side rep $rep FAILED" >&2
