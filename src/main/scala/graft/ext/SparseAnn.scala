@@ -104,11 +104,15 @@ object SparseAnn {
    */
   private[ext] def vectorTable(n: DataFrame, dim: Int = IvfDim): DataFrame = {
     require(dim >= 1, s"dim must be positive (dim=$dim)")
-    n.groupBy("vector").agg(
+    // `j` is projected BEFORE the aggregate: there the codegen'd
+    // projection evaluates the interpreted charFold once per row; inside
+    // collect_list's argument it runs once per textual copy in the
+    // avalanche (four)
+    n.withColumn("j", expr(ivfDimSql("coord", dim)).cast("long"))
+      .groupBy("vector").agg(
         sort_array(collect_list(struct(col("coord"), col("nv")))).as("cv"),
         sqrt(sum(col("nv") * col("nv"))).as("mod"),
-        sort_array(collect_list(struct(
-          expr(ivfDimSql("coord", dim)).cast("long").as("j"), col("nv")))).as("jv"))
+        sort_array(collect_list(struct(col("j"), col("nv")))).as("jv"))
       .select(col("vector"), col("cv"), col("mod"),
         sumRuns(col("jv")).cast("array<struct<j:bigint,hv:double>>").as("hj"))
   }
@@ -152,9 +156,13 @@ object SparseAnn {
       cap: Int = PairGroupCap): DataFrame = {
     require(cap >= 1)
     graft.functions.GraftFunctions.register(table.sparkSession)
-    val m2 = memb.join(table.select("vector", "cv", "mod"), "vector")
-    val grpN = m2.groupBy("cid", "sub").agg(count(lit(1)).as("grp_n"))
-    val withN = m2.join(grpN, Seq("cid", "sub"))
+    // group sizes from the membership alone (every member has a table
+    // row), broadcast in the initial plan: both join branches below then
+    // share one exchange; a join AQE picks at run time makes the final
+    // plan's shape depend on which query stage finishes first
+    val grpN = memb.groupBy("cid", "sub").agg(count(lit(1)).as("grp_n"))
+    val withN = memb.join(broadcast(grpN), Seq("cid", "sub"))
+      .join(table.select("vector", "cv", "mod"), "vector")
       .withColumn("npb", (expr(s"CAST((grp_n - 1) DIV $cap AS BIGINT)") + lit(1L)))
     // full-string id fold: probe-based tokenValue collapses integer ids
     // into collision classes and breaks the chunk cap (TextHash.charFold)
@@ -381,6 +389,9 @@ object SparseAnn {
     * components. Model-sized (≤ lists × dim doubles) — the sanctioned
     * driver-side model table, like k-means centroids / LR weights. */
   private final case class CbRow(cid: Long, c2: Double, c: Seq[Double])
+  /** The M-step's list-size pseudo-feature: no hashed dimension is
+    * negative, so its (cid, SizeJ) sum is the member count. */
+  private val SizeJ = -1L
 
   /**
    * The Lloyd fit and final ranked list distances over a pinned
@@ -414,11 +425,20 @@ object SparseAnn {
         s"(lists=$lists, iters=$iters, nprobe=$nprobe)")
     def cbRow(cid: Long, arr: Array[Double]): CbRow =
       CbRow(cid, arr.map(c => c * c).sum, arr.toSeq)
-    def collectCb(cent: DataFrame): Seq[CbRow] = {
+    // (cid, j, sv) rows: the per-list component sums, plus the list
+    // size as the sum at j = SizeJ; the centroid component is the
+    // snapped mean, the Column spelling of [[snap]] in driver doubles
+    def collectCb(sums: DataFrame): Seq[CbRow] = {
+      val rows = sums.collect()
+      val sizes = rows.collect {
+        case r if r.getLong(1) == SizeJ => r.getLong(0) -> r.getDouble(2)
+      }.toMap
       val m = scala.collection.mutable.Map.empty[Long, Array[Double]]
-      cent.collect().foreach { r =>
-        m.getOrElseUpdate(r.getLong(0), Array.fill(dim)(0.0))(
-          r.getLong(1).toInt) = r.getDouble(2)
+      rows.foreach { r =>
+        val (cid, j) = (r.getLong(0), r.getLong(1))
+        if (j != SizeJ)
+          m.getOrElseUpdate(cid, Array.fill(dim)(0.0))(j.toInt) =
+            math.floor(r.getDouble(2) / sizes(cid) * 1e6 + 0.50001) / 1e6
       }
       m.toSeq.sortBy(_._1).map { case (cid, arr) => cbRow(cid, arr) }
     }
@@ -497,16 +517,14 @@ object SparseAnn {
       }
     for (_ <- 1 until iters) {
       // M-step: each vector's assignment rides its own row next to its
-      // hashed entries, so the centroid sums are one (cid, j) aggregate
-      // over explode(hj) — no corpus join; the model-sized snapped
-      // centroid table comes back to the driver
-      val asg = scoredDf(cb, 1)
-      val sizes = asg.groupBy("cid").agg(count(lit(1)).as("cn"))
-      cb = collectCb(asg.select(col("cid"), explode(col("hj")).as("e"))
-        .groupBy(col("cid"), col("e.j").as("j")).agg(sum("e.hv").as("sv"))
-        .join(broadcast(sizes), "cid")
-        .select(col("cid"), col("j"),
-          snap(col("sv") / col("cn").cast("double")).as("c")))
+      // hashed entries, so the centroid sums AND the list sizes are one
+      // (cid, j) aggregate over explode(hj) with a (SizeJ, 1.0) entry
+      // appended per vector — one scoring pass, no corpus join; the
+      // model-sized sums come back to the driver
+      cb = collectCb(scoredDf(cb, 1)
+        .select(col("cid"), explode(concat(col("hj"),
+          array(struct(lit(SizeJ).as("j"), lit(1.0).as("hv"))))).as("e"))
+        .groupBy(col("cid"), col("e.j").as("j")).agg(sum("e.hv").as("sv")))
     }
     pin(scoredDf(cb, nprobe).drop("hj"))
   }

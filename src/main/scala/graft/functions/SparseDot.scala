@@ -57,7 +57,9 @@ case class SparseDot(left: Expression, right: Expression) extends BinaryExpressi
     while (i < n0 && j < n1) {
       val e0 = x.getStruct(i, 2)
       val e1 = y.getStruct(j, 2)
-      val c = e0.getUTF8String(0).compareTo(e1.getUTF8String(0))
+      // binaryCompare, not compareTo: Spark 4's compareTo reads an
+      // environment variable on every call
+      val c = e0.getUTF8String(0).binaryCompare(e1.getUTF8String(0))
       if (c == 0) { s += e0.getDouble(1) * e1.getDouble(1); i += 1; j += 1 }
       else if (c < 0) i += 1
       else j += 1
@@ -84,7 +86,7 @@ case class SparseDot(left: Expression, right: Expression) extends BinaryExpressi
          |while ($i < $n0 && $j < $n1) {
          |  $row $e0 = $a.getStruct($i, 2);
          |  $row $e1 = $b.getStruct($j, 2);
-         |  int $c = $e0.getUTF8String(0).compareTo($e1.getUTF8String(0));
+         |  int $c = $e0.getUTF8String(0).binaryCompare($e1.getUTF8String(0));
          |  if ($c == 0) { $s += $e0.getDouble(1) * $e1.getDouble(1); $i++; $j++; }
          |  else if ($c < 0) { $i++; } else { $j++; }
          |}
