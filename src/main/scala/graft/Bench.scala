@@ -8,6 +8,11 @@ package graft
  */
 object Bench {
 
+  /** The last stdout line lists every query at or above this many
+    * seconds plus the run's top 12, capped at [[SlowLineMax]] entries. */
+  private val SlowLineSec = 3.0
+  private val SlowLineMax = 40
+
   /**
    * The scale-representative subset: every distinct physical shape (shuffle
    * agg, self-equi-join, broadcast join, window, banded LSH join, HOF array
@@ -516,24 +521,16 @@ object Bench {
         s"\"read_wait_ms\":${c.readWaitMs},\"write_ms\":${c.writeMs}}"
     }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    // vs_prev_shared (VERDICT r9 ask #8): the canonical round-over-round
-    // ratio is computed AT BENCH TIME and carried inside the artifact
-    // itself — so the README's prose can never drift from the committed
-    // data again (the r9 verdict caught a 0.85x claim where the
-    // artifacts said 0.952). PROVENANCE (r12, VERDICT r11 ask #7): the
-    // baseline is the COMMITTED artifact — `git show HEAD:bench_out
-    // .json` — never the in-tree file (r11's embedded ratio compared
-    // against an uncommitted intermediate and could not be reproduced
-    // from committed artifacts); the baseline's commit hash rides along
+    // vs_prev_shared: the canonical run-over-run ratio is computed AT
+    // BENCH TIME and carried inside the artifact itself, so prose can
+    // never drift from the committed data. PROVENANCE: the baseline is
+    // the COMMITTED artifact — `git show HEAD:bench_out.json` — never
+    // the in-tree file (an uncommitted intermediate cannot be
+    // reproduced from history); the baseline's commit hash rides along
     // so the ratio is re-derivable from history alone. Falls back to
     // the in-tree file (marked "worktree") only when git is unusable.
     // Shared set = queries present in BOTH runs; ratio = cur/prev totals.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
-    // the previous committed artifact's slowest-12 names: unioned into
-    // the final stdout line's query set (r14, VERDICT r13 ask #2) so a
-    // query that gets FASTER and drops out of today's top 12 still
-    // reports a number instead of tripping PERF's dropped_from_bench
-    var prevSlowest: Set[String] = Set.empty
     val vsPrev: String = try {
       import scala.sys.process._
       val repoDir = new java.io.File("/root/repo")
@@ -561,7 +558,6 @@ object Bench {
             case Some(m) =>
               val prevQ = pairRe.findAllMatchIn(m.group(1))
                 .map(mm => mm.group(1) -> mm.group(2).toDouble).toMap
-              prevSlowest = prevQ.toSeq.sortBy(-_._2).take(12).map(_._1).toSet
               val shared = results.collect {
                 case (k, v) if prevQ.contains(k) => (prevQ(k), v)
               }
@@ -589,14 +585,13 @@ object Bench {
     // always-parseable summary: total + the slowest queries + error and
     // query counts. The full per-query artifact lives in bench_out.json
     // (committed) for the judge to read whole.
-    // top 12 of THIS run ∪ the previous artifact's top 12 (bounded at
-    // 24 entries ≈ 850 chars, safely inside the tail capture): the
-    // union keeps round-over-round comparison keys stable even when an
-    // optimization pushes a query out of today's slowest set
-    val slowNames = results.sortBy(-_._2).take(12).map(_._1).toSet ++
-      prevSlowest.intersect(results.map(_._1).toSet)
-    val slowest = results.filter(r => slowNames(r._1)).sortBy(-_._2)
-      .map { case (k, v) => s"${jstr(k)}:${r3(v)}" }.mkString("{", ",", "}")
+    // every query at or above SlowLineSec plus this run's top 12, at
+    // most SlowLineMax entries (≈ 1400 chars, inside the tail capture):
+    // a slow query keeps its key however the ranking shifts, with no
+    // dependency on a previous artifact
+    val slowest = results.sortBy(-_._2).zipWithIndex
+      .collect { case ((k, v), i) if i < 12 || v >= SlowLineSec => s"${jstr(k)}:${r3(v)}" }
+      .take(SlowLineMax).mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","queries":$slowest,"n_queries":${results.size},"n_errors":${errors.size},"full":"bench_out.json"}""")
     System.out.flush()
   }

@@ -151,20 +151,11 @@ final class CosineAnalysis(
    * ([[graft.text.Tokenizer.tfIdf]]) the dropped coordinates are exactly
    * the ones whose similarity contribution is ~0.
    *
-   * One counting aggregate keyed by coordinate + one equi-join that
-   * Catalyst/AQE broadcasts when the surviving-coordinate table is small.
+   * One counting aggregate keyed by coordinate + one left-semi
+   * equi-join ([[PairSurface.cap]]).
    */
-  def dfCap(normalized: Dataset[NormalizedElement], maxDf: Long): Dataset[NormalizedElement] = {
-    require(maxDf > 0)
-    val keep = normalized
-      .groupBy(col(predictionAxis).as("coord"))
-      .agg(count(lit(1)).as("df"))
-      .where($"df" <= maxDf)
-      .select($"coord")
-    normalized
-      .join(keep, normalized(predictionAxis) === keep("coord"), "left_semi")
-      .as[NormalizedElement]
-  }
+  def dfCap(normalized: Dataset[NormalizedElement], maxDf: Long): Dataset[NormalizedElement] =
+    PairSurface.cap(normalized.toDF(), predictionAxis, maxDf).as[NormalizedElement]
 
   /**
    * Skew-proof pair alignment: same output as [[alignedPairs]], built with
@@ -386,8 +377,8 @@ final class CosineAnalysis(
    *
    * The 1-row decision collect is model-sized (the k-means-centroid
    * convention) and executes at call time; the normalized table is
-   * pinned with an eager localCheckpoint and feeds both the probe
-   * aggregate and the chosen kernel — one normalize pass per call (the
+   * pinned with an eager localCheckpoint and feeds both the global
+   * probe and the chosen kernel — one normalize pass per call (the
    * [[graft.ext.Dedup.autoDedupPairs]] convention).
    */
   def autoAlignedPairs(matrix: Dataset[MatrixElement],
@@ -395,14 +386,9 @@ final class CosineAnalysis(
       budgetPairsPerVec: Long = CosineAnalysis.AutoAlignBudgetPerVec,
       salts: Int = 8): Dataset[FactorNormalizedValue] = {
     val n = normalize(matrix).localCheckpoint()
-    val cells = n.toDF().select(
-      col(axis).as("vector"), col(predictionAxis).as("coord"),
-      lit(1).as("__grp"))
-    val route = CosineAnalysis
-      .autoRouteAligned(cells, "vector", "coord", "__grp", maxDf, budgetPairsPerVec)
-      .select("kernel").collect()
-    val kernel = if (route.isEmpty) "exact" else route(0).getString(0)
-    kernel match {
+    CosineAnalysis
+      .routeAligned(n.toDF(), axis, predictionAxis, Nil, maxDf, budgetPairsPerVec)
+      .select("kernel").head().getString(0) match {
       case "exact"  => alignedPairs(n)
       case "salted" => alignedPairsSalted(n, salts)
       case _        => alignedPairs(dfCap(n, maxDf))
@@ -411,13 +397,13 @@ final class CosineAnalysis(
 }
 
 /**
- * The cosine core's KERNEL ROUTER (r13, VERDICT r12 ask #1) — the
- * [[graft.ext.Dedup.autoRoute]] pattern applied to the pair-alignment
- * family. The reference's one real scalability cliff is exactly here
- * (MatrixCosineAnalyse.scala:168–202: per-coordinate C(n,2) expansion —
- * the first thing a 100 TB doc-term matrix hits), and until now the
- * engine DOCUMENTED the escape hatches ([[CosineAnalysis.dfCap]],
- * [[CosineAnalysis.alignedPairsSalted]]) instead of choosing one.
+ * The cosine core's KERNEL ROUTER — the [[graft.ext.Dedup.autoRoute]]
+ * pattern applied to the pair-alignment family. The reference's one
+ * real scalability cliff is exactly here (MatrixCosineAnalyse.scala:
+ * 168–202: per-coordinate C(n,2) expansion — the first thing a 100 TB
+ * doc-term matrix hits); the router chooses among the escape hatches
+ * ([[CosineAnalysis.dfCap]], [[CosineAnalysis.alignedPairsSalted]])
+ * from the measured surface.
  */
 object CosineAnalysis {
 
@@ -444,23 +430,21 @@ object CosineAnalysis {
   val AutoAlignHotDen: Long = 2L
 
   /**
-   * "Which alignment kernel do I run on 100 TB", decided from MEASURED
-   * surfaces instead of guessed: one (group, coordinate) df aggregate
-   * over the COO cells (one row per (vector, coordinate) cell — the
-   * same table [[CosineAnalysis.alignedPairs]] self-joins anyway) folds
-   * per group to
+   * "Which alignment kernel do I run on 100 TB", decided per group from
+   * the measured coordinate pair surface of the COO cells (one row per
+   * (vector, coordinate) cell — the table
+   * [[CosineAnalysis.alignedPairs]] self-joins;
+   * [[PairSurface.probe]] keyed by `coordCol`, whose columns are
+   * documented there), plus
    *
-   *   - `uncapped_pairs` = Σ C(df, 2) — the exact aligner's output
-   *     surface;
    *   - `hot_pairs` = C(max_df, 2) — the single hottest coordinate's
-   *     share of it (the task-skew signal: the plain self-equi-join
-   *     hands all of it to the task owning that coordinate);
-   *   - `capped_pairs` / `retained_postings` — the surface and the
-   *     surviving cells under the `maxDf` cap ([[CosineAnalysis.dfCap]]);
+   *     share of the surface (the task-skew signal: the plain
+   *     self-equi-join hands all of it to the task owning that
+   *     coordinate);
    *   - `budget_pairs` = `budgetPairsPerVec` · n_vectors — the
    *     affordable (matrix-linear) alignment budget.
    *
-   * and the rule ladder picks per group:
+   * The rule ladder:
    *
    *   1. `exact` — the surface fits the budget AND no single coordinate
    *      dominates it (hot_pairs ≤ ⅔ · uncapped): plain
@@ -482,32 +466,25 @@ object CosineAnalysis {
    *      ([[graft.ext.SparseAnn.topSimilarIvf]]), not all-pairs
    *      alignment.
    *
-   * Everything is integer arithmetic end to end (counts, C(df,2) via
-   * integral DIV, the CASE ladder), so the decision row is exact and
-   * engine-neutral — the contract oracle replays it verbatim. Scale
-   * shape: ONE (group, coordinate)-keyed aggregate + one group-keyed
-   * fold + one group-keyed distinct count; nothing pairwise anywhere —
-   * the plan-before-you-run probe, priced at one pass over the cells.
+   * The ladder is integer arithmetic like the probe, so the decision
+   * row is exact and the contract oracle replays it verbatim.
    */
   def autoRouteAligned(cells: DataFrame, vecCol: String, coordCol: String,
       groupCol: String, maxDf: Long = AutoAlignMaxDf,
-      budgetPairsPerVec: Long = AutoAlignBudgetPerVec): DataFrame = {
-    require(maxDf >= 1 && budgetPairsPerVec >= 0)
-    val dfs = cells.groupBy(col(groupCol), col(coordCol).as("coord"))
-      .agg(count(lit(1)).as("df"))
-    val nv = cells.groupBy(col(groupCol))
+      budgetPairsPerVec: Long = AutoAlignBudgetPerVec): DataFrame =
+    routeAligned(cells, vecCol, coordCol, Seq(groupCol), maxDf, budgetPairsPerVec)
+
+  /** The router over `groupCols` (empty = one global row). */
+  private[core] def routeAligned(cells: DataFrame, vecCol: String,
+      coordCol: String, groupCols: Seq[String], maxDf: Long,
+      budgetPairsPerVec: Long): DataFrame = {
+    require(budgetPairsPerVec >= 0,
+      s"budgetPairsPerVec must be >= 0, got $budgetPairsPerVec")
+    val nv = cells.groupBy(groupCols.map(col): _*)
       .agg(countDistinct(col(vecCol)).as("n_vectors"))
-    dfs.groupBy(col(groupCol))
-      .agg(
-        sum(col("df")).as("postings"),
-        max(col("df")).as("max_df"),
-        sum(expr("df * (df - 1) DIV 2")).as("uncapped_pairs"),
-        sum(when(col("df") <= maxDf, expr("df * (df - 1) DIV 2"))
-          .otherwise(0L)).as("capped_pairs"),
-        sum(when(col("df") <= maxDf, col("df")).otherwise(0L))
-          .as("retained_postings"))
+    PairSurface.probe(cells, groupCols, coordCol, maxDf)
       .withColumn("hot_pairs", expr("max_df * (max_df - 1) DIV 2"))
-      .join(nv, groupCol)
+      .join(nv, groupCols)
       .withColumn("budget_pairs", col("n_vectors") * lit(budgetPairsPerVec))
       .withColumn("kernel",
         when(col("uncapped_pairs") <= col("budget_pairs") &&
@@ -515,10 +492,9 @@ object CosineAnalysis {
               col("uncapped_pairs") * lit(AutoAlignHotDen), lit("exact"))
           .when(col("uncapped_pairs") <= col("budget_pairs"), lit("salted"))
           .otherwise(lit("dfcap")))
-      .select(col(groupCol), col("n_vectors"), col("postings"),
-        col("max_df"), col("hot_pairs"), col("uncapped_pairs"),
-        col("capped_pairs"), col("retained_postings"), col("budget_pairs"),
-        col("kernel"))
+      .select((groupCols ++ Seq("n_vectors", "postings", "max_df",
+        "hot_pairs", "uncapped_pairs", "capped_pairs", "retained_postings",
+        "budget_pairs", "kernel")).map(col): _*)
   }
 }
 

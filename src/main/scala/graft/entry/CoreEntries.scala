@@ -488,17 +488,9 @@ object CoreEntries {
         |  SELECT 'skewed', CAST(o_custkey AS VARCHAR), 'hot' FROM custs
         |  WHERE CAST(floor(sqrt(o_custkey)) AS BIGINT)
         |        * CAST(floor(sqrt(o_custkey)) AS BIGINT) = o_custkey),
-        |dfs AS (SELECT regime, x, CAST(COUNT(*) AS BIGINT) AS df
-        |        FROM cells GROUP BY 1, 2),
+        |${pairSurfaceSql("cells", "regime", "x", cap)},
         |nv AS (SELECT regime, CAST(COUNT(DISTINCT y) AS BIGINT) AS n_vectors
-        |       FROM cells GROUP BY 1),
-        |agg AS (SELECT regime,
-        |  CAST(SUM(df) AS BIGINT) AS postings,
-        |  CAST(MAX(df) AS BIGINT) AS max_df,
-        |  CAST(SUM(df * (df - 1) // 2) AS BIGINT) AS uncapped_pairs,
-        |  CAST(SUM(CASE WHEN df <= $cap THEN df * (df - 1) // 2 ELSE 0 END) AS BIGINT) AS capped_pairs,
-        |  CAST(SUM(CASE WHEN df <= $cap THEN df ELSE 0 END) AS BIGINT) AS retained_postings
-        |  FROM dfs GROUP BY 1)
+        |       FROM cells GROUP BY 1)
         |SELECT a.regime, nv.n_vectors, a.postings, a.max_df,
         |  CAST(a.max_df * (a.max_df - 1) // 2 AS BIGINT) AS hot_pairs,
         |  a.uncapped_pairs, a.capped_pairs, a.retained_postings,

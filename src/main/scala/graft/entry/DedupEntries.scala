@@ -983,17 +983,9 @@ object DedupEntries {
         |shg AS MATERIALIZED (SELECT DISTINCT rid, regime,
         |        ${TextHash.shingleHash("v", "v2", "v3")} AS sh
         |        FROM tv3 WHERE v3 IS NOT NULL),
-        |dfs AS (SELECT regime, sh, CAST(COUNT(*) AS BIGINT) AS df
-        |        FROM shg GROUP BY 1, 2),
+        |${pairSurfaceSql("shg", "regime", "sh", cap)},
         |nd AS (SELECT regime, CAST(COUNT(DISTINCT rid) AS BIGINT) AS n_docs
-        |       FROM shg GROUP BY 1),
-        |agg AS (SELECT regime,
-        |  CAST(SUM(df) AS BIGINT) AS postings,
-        |  CAST(MAX(df) AS BIGINT) AS max_df,
-        |  CAST(SUM(df * (df - 1) // 2) AS BIGINT) AS uncapped_pairs,
-        |  CAST(SUM(CASE WHEN df <= $cap THEN df * (df - 1) // 2 ELSE 0 END) AS BIGINT) AS capped_pairs,
-        |  CAST(SUM(CASE WHEN df <= $cap THEN df ELSE 0 END) AS BIGINT) AS retained_postings
-        |  FROM dfs GROUP BY 1)
+        |       FROM shg GROUP BY 1)
         |SELECT a.regime, nd.n_docs, a.postings, a.max_df, a.uncapped_pairs,
         |  a.capped_pairs, a.retained_postings,
         |  nd.n_docs * $bud AS budget_pairs,

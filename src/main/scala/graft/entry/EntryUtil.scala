@@ -79,6 +79,24 @@ object EntryUtil {
   /** DuckDB spelling of [[r2]], for oracle SQL. */
   def r2sql(e: String): String = s"floor(($e)*100 + 0.50001)/100"
 
+  /** The router oracles' spelling of [[graft.core.PairSurface.probe]]:
+    * a `dfs` CTE counting (`groupCol`, `keyCol`) rows of `table`, and
+    * an `agg` CTE folding it per group to postings, max_df,
+    * uncapped_pairs, capped_pairs and retained_postings at `maxDf`.
+    * Every sum is cast back to BIGINT (DuckDB types a bare SUM(BIGINT)
+    * as HUGEINT). */
+  def pairSurfaceSql(table: String, groupCol: String, keyCol: String,
+      maxDf: Long): String =
+    s"""dfs AS (SELECT $groupCol, $keyCol, CAST(COUNT(*) AS BIGINT) AS df
+       |        FROM $table GROUP BY 1, 2),
+       |agg AS (SELECT $groupCol,
+       |  CAST(SUM(df) AS BIGINT) AS postings,
+       |  CAST(MAX(df) AS BIGINT) AS max_df,
+       |  CAST(SUM(df * (df - 1) // 2) AS BIGINT) AS uncapped_pairs,
+       |  CAST(SUM(CASE WHEN df <= $maxDf THEN df * (df - 1) // 2 ELSE 0 END) AS BIGINT) AS capped_pairs,
+       |  CAST(SUM(CASE WHEN df <= $maxDf THEN df ELSE 0 END) AS BIGINT) AS retained_postings
+       |  FROM dfs GROUP BY 1)""".stripMargin
+
   def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
 

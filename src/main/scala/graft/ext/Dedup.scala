@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.PairSurface
+
 /**
  * Document deduplication for training-data pipelines: exact duplicates,
  * n-gram (shingle) Jaccard, MinHash-LSH candidate generation, and SimHash.
@@ -139,33 +141,18 @@ object Dedup {
       .select("doc0", "doc1", "jaccard")
 
   /**
-   * Shingle document-frequency cap — the dedup mirror of
-   * [[graft.core.CosineAnalysis.dfCap]] (the cosine path solved exactly
-   * this in r3; the exact pair kernels here didn't inherit it until r7):
-   * drop every shingle present in more than `maxDf` documents BEFORE any
-   * pair generation. One boilerplate shingle shared by a large fraction
-   * of N docs contributes ~C(N,2) pairs all by itself — the one term
-   * that makes Σ_sh C(df_sh, 2) explode — and a shingle that common
-   * carries ~zero similarity signal (it is the shingle-space stop word).
-   * Capping bounds every shingle's pair expansion at C(maxDf, 2).
-   *
-   * Semantics: the capped table is the input "as if the boilerplate
-   * shingles did not exist" — downstream intersection AND set sizes both
-   * see the capped sets (same contract as the cosine dfCap, which drops
-   * the coordinate entirely), so pairs whose shingles are all below the
-   * cap are byte-identical to the uncapped result.
-   *
-   * One counting aggregate keyed by shingle + one left-semi equi-join;
-   * AQE broadcasts the surviving-shingle side when it is small.
+   * Shingle document-frequency cap, the dedup mirror of
+   * [[graft.core.CosineAnalysis.dfCap]]: drop every shingle present in
+   * more than `maxDf` documents BEFORE any pair generation. One
+   * boilerplate shingle shared by a large fraction of N docs contributes
+   * ~C(N,2) pairs all by itself, and a shingle that common carries ~zero
+   * similarity signal (it is the shingle-space stop word). Capping
+   * bounds every shingle's pair expansion at C(maxDf, 2); pairs whose
+   * shingles all sit below the cap keep their uncapped answer
+   * ([[graft.core.PairSurface.cap]] semantics).
    */
-  def dfCapShingles(sh: DataFrame, maxDf: Long): DataFrame = {
-    require(maxDf >= 1)
-    val keep = sh.groupBy(col("sh"))
-      .agg(count(lit(1)).as("df_sh"))
-      .where(col("df_sh") <= maxDf)
-      .select(col("sh"))
-    sh.join(keep, Seq("sh"), "left_semi")
-  }
+  def dfCapShingles(sh: DataFrame, maxDf: Long): DataFrame =
+    PairSurface.cap(sh, "sh", maxDf)
 
   /** Shared pair-overlap kernel: for every pair sharing ≥1 shingle, the
     * intersection size and both set sizes — (doc0, doc1, i, n0, n1) in
@@ -279,13 +266,10 @@ object Dedup {
    */
   def weightedJaccardDups(docs: DataFrame, idCol: String, textCol: String,
       minWj: Double = 0.5, maxDf: Long = 200): DataFrame = {
-    require(maxDf >= 1)
     val tf = TextAnalysis.tokenArray(docs, idCol, textCol)
       .select(col("doc_id"), explode(col("t")).as("token"))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val keep = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      .where(col("df") <= maxDf).select("token")
-    val capped = tf.join(keep, Seq("token"), "left_semi")
+    val capped = PairSurface.cap(tf, "token", maxDf)
     val sums = capped.groupBy("doc_id").agg(sum(col("tf")).as("s"))
     val smin = capped.as("a").join(capped.as("b"),
         col("a.token") === col("b.token") &&
@@ -302,16 +286,13 @@ object Dedup {
   }
 
   /** The per-document PREFIX of the rarity-ordered shingle list — the
-    * first `n − ⌈t·n⌉ + 1` shingles by (df, sh) order. Shared by
-    * [[prefixCandidates]] (the candidate join runs only over these rows)
-    * and [[graft.PrefixDiag]] (which prints the pair surface this table
-    * implies) so the diagnostic can never desynchronize from the code
-    * path it explains. The threshold enters in pure integer arithmetic
-    * (`ceil(t·n)` = `(num·n + den − 1) DIV den` on a 1/1000 grid) —
-    * integral DIV, never Spark's Divide (which returns DOUBLE on long
-    * operands and is exact only below 2^53 — ADVICE r11), so no float
+    * first `n − ⌈t·n⌉ + 1` shingles by (df, sh) order, the rows
+    * [[prefixCandidates]] joins over. The threshold enters in pure
+    * integer arithmetic (`ceil(t·n)` = `(num·n + den − 1) DIV den` on a
+    * 1/1000 grid) — integral DIV, never Spark's Divide (which returns
+    * DOUBLE on long operands and is exact only below 2^53), so no float
     * rounding can shorten a prefix below the lemma's bound at ANY n. */
-  private[graft] def prefixTable(sh: DataFrame, minJaccard: Double): DataFrame = {
+  private def prefixTable(sh: DataFrame, minJaccard: Double): DataFrame = {
     val (num, den) = (math.round(minJaccard * 1000).toInt, 1000)
     require(num > 0 && num <= den, "minJaccard must be in (0, 1]")
     val dfs = sh.groupBy("sh").agg(count(lit(1)).as("df_sh"))
@@ -379,7 +360,7 @@ object Dedup {
    * shingle the corpus once (caller-owned caching, the [[dupGroups]]
    * convention).
    *
-   * EAGER EXECUTION NOTE (ADVICE r12, the SparseAnn.ivfRanked convention):
+   * EAGER EXECUTION NOTE:
    * [[jaccardForBySh]]'s auto prune gate runs a 1-row aggregate+collect
    * over the (capped) shingle table at DataFrame-CONSTRUCTION time, so
    * calling this executes one corpus pass immediately — and with the
@@ -393,13 +374,12 @@ object Dedup {
       minJaccard: Double = 0.3,
       pin: DataFrame => DataFrame = identity,
       maxDf: Option[Long] = None): DataFrame = {
-    // `maxDf` (r11, VERDICT r10 ask #4): the [[dfCapShingles]] Zipf-head
-    // kill switch, threaded with POPULATION-CONSISTENT semantics — the
-    // cap is applied ONCE, before BOTH the candidate and the verify
-    // branch, so the prefix filter's lossless lemma holds over the
-    // capped population (capped candidate rule + capped Jaccard =
-    // exhaustive capped kernel; capping only one side would break the
-    // prefix-length bound). Without it a boilerplate shingle shared by
+    // `maxDf`: the [[dfCapShingles]] Zipf-head kill switch, threaded
+    // with POPULATION-CONSISTENT semantics — the cap is applied ONCE,
+    // before BOTH the candidate and the verify branch, so the prefix
+    // filter's lossless lemma holds over the capped population (capped
+    // candidate rule + capped Jaccard = exhaustive capped kernel;
+    // capping only one side would break the prefix-length bound). Without it a boilerplate shingle shared by
     // k candidate docs costs C(k, 2) verify rows no matter how well the
     // prefix filter pruned — the same hot-key class as basketRules'
     // maxBasket, priced by the dedup_jaccard_prefix_head bench pair.
@@ -939,12 +919,11 @@ object Dedup {
   }
 
   /**
-   * [[jaccardFor]] with the INTERSECTION-FIRST physical shape (r10,
-   * after the sfx10 disk-fill): the pair-first spelling ships each
-   * document's shingle set once per candidate pair — |candidates| ×
-   * shingles-per-doc wide rows through the (doc1, sh) exchange, measured
-   * ~72 GB for the prefix route's 70M candidates at 100× (500k docs)
-   * where it filled local disk. Here the per-pair overlap counts come
+   * [[jaccardFor]] with the INTERSECTION-FIRST physical shape: the
+   * pair-first spelling ships each document's shingle set once per
+   * candidate pair — |candidates| × shingles-per-doc wide rows through
+   * the (doc1, sh) exchange, measured ~72 GB for the prefix route's 70M
+   * candidates at 100× (500k docs) where it filled local disk. Here the per-pair overlap counts come
    * from the shingle-keyed self-join FIRST — Σ_sh C(df_sh, 2) SKINNY
    * (doc0, doc1) rows with map-side partial counts — then an inner join
    * keeps candidate pairs only (~2 GB at the same scale, ~30×
@@ -956,7 +935,7 @@ object Dedup {
    * candidates ARE a constant fraction of Σ_sh C(df, 2). The one case
    * where the self-join used to lose — few candidates on a df-HEADED
    * corpus, where it paid C(df_head, 2) for pairs the candidate filter
-   * already pruned — is handled in-kernel since r14 by the
+   * already pruned — is handled in-kernel by the
    * heavy-shingle split below: head shingles are counted candidate-first
    * (the [[jaccardFor]] shape), everything else keeps the skinny
    * self-join. Both verifications give every distinct candidate pair
@@ -967,9 +946,9 @@ object Dedup {
    */
   def jaccardForBySh(pairs0: DataFrame, sh: DataFrame,
       pruneCandidateDocs: Option[Boolean] = None): DataFrame = {
-    // CANDIDATE-DOC PRUNE (r11, ADVICE r10): the self-join only ever
-    // contributes rows for pairs whose BOTH endpoints appear in `pairs`,
-    // so semi-join the shingle table down to candidate documents first.
+    // CANDIDATE-DOC PRUNE: the self-join only ever contributes rows for
+    // pairs whose BOTH endpoints appear in `pairs`, so semi-join the
+    // shingle table down to candidate documents first.
     // Semantics-free (intersection counts and set sizes of surviving
     // docs are untouched) and it removes the Σ_sh C(df, 2) term for
     // every document the candidate filter already excluded — on a
@@ -977,13 +956,13 @@ object Dedup {
     // fraction, the df-head collapses with them. When candidates touch
     // most docs the prune is a no-op whose distinct + semi-join
     // exchanges are pure overhead (measured 1.53× on the sf0.1 contract
-    // corpus, VERDICT r11 What's-wrong #1) and the caller needs the
+    // corpus) and the caller needs the
     // population cap instead ([[prefixJaccardDups]]'s `maxDf`).
     //
-    // REGIME GATE (r12, VERDICT r11 ask #3): `pruneCandidateDocs`
-    // None = auto — ONE cheap aggregate over the shingle table decides:
-    // prune iff the hottest shingle's own pair surface exceeds the
-    // postings count (`max_df² > postings` — a genuine df-HEAD). That
+    // REGIME GATE: `pruneCandidateDocs` None = auto — the global
+    // [[PairSurface.probe]] over the shingle table decides: prune iff
+    // the hottest shingle's own pair surface exceeds the postings count
+    // (`max_df² > postings` — a genuine df-HEAD). That
     // is both the semantic signal (boilerplate heads are exactly where
     // candidates collapse to a small doc fraction, so the semi-join
     // excises real work) and — measured on the planted head fixture at
@@ -994,7 +973,7 @@ object Dedup {
     // (106.4 s, same 12,137 output rows). On head-free corpora the
     // prune's distinct + semi-join exchanges are pure overhead and the
     // broadcast expansion is the faster plan (2.64 s vs 4.03 s on the
-    // sf0.1 contract corpus, VERDICT r11 What's-wrong #1) — auto skips
+    // sf0.1 contract corpus) — auto skips
     // it there. Some(b) forces the choice for callers who know their
     // regime. Either way the verification stays INTERSECTION-FIRST
     // (the shape whose skinny self-join certified the 100× curve — the
@@ -1002,10 +981,8 @@ object Dedup {
     // sfx10 disk-fill); the gate only decides whether the semi-join
     // narrows the self-join's input first.
     val doPrune = pruneCandidateDocs.getOrElse {
-      val r = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-        .agg(coalesce(max(col("df")), lit(0L)).as("max_df"),
-          coalesce(sum(col("df")), lit(0L)).as("postings"))
-        .collect()(0)
+      val r = PairSurface.probe(sh, Nil, "sh")
+        .select("max_df", "postings").collect()(0)
       r.getLong(0) * r.getLong(0) > r.getLong(1)
     }
     // in the prune branch the candidate table is consumed three times
@@ -1022,7 +999,7 @@ object Dedup {
         sh.join(candDocs, Seq("doc_id"), "left_semi")
       } else sh
     val counts = shp.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // HEAVY-SHINGLE SPLIT (r14, the basketPairSupports pattern, guide
+    // HEAVY-SHINGLE SPLIT (the basketPairSupports pattern, guide
     // §2.5 — special-case the hot keys): in the df-head regime the
     // self-join's Σ_sh C(df, 2) surface is owned by a handful of
     // boilerplate shingles (df ≈ |corpus|) whose pair expansions the
@@ -2106,19 +2083,12 @@ object Dedup {
   val AutoRouteBudgetPerDoc: Long = 128L
 
   /**
-   * The KERNEL ROUTER (r12, VERDICT r11 ask #8) — the "which dedup
-   * kernel do I run on 100 TB" decision, made from MEASURED surfaces
-   * instead of guessed: one (group, shingle) df aggregate (the same
-   * table every kernel builds anyway) folds per group to
-   *
-   *   - `uncapped_pairs` = Σ C(df, 2) — the exhaustive kernel's
-   *     candidate surface ([[jaccardPairs]]);
-   *   - `capped_pairs` / `retained_postings` — the same surface and the
-   *     surviving postings under the `maxDf` cap ([[dfCapShingles]]);
-   *   - `budget_pairs` = `budgetPairsPerDoc` · n_docs — the affordable
-   *     (corpus-linear) verification budget.
-   *
-   * and the rule ladder picks per group:
+   * The KERNEL ROUTER — "which dedup kernel do I run on 100 TB", decided
+   * per group from the measured shingle pair surface
+   * ([[graft.core.PairSurface.probe]] keyed by `sh`; its columns are
+   * documented there), with `budget_pairs` = `budgetPairsPerDoc` ·
+   * n_docs, the affordable (corpus-linear) verification budget. The
+   * rule ladder:
    *
    *   1. `exact` — the uncapped surface already fits the budget: run
    *      [[ngramJaccardDups]] (or [[prefixJaccardDups]] uncapped; both
@@ -2127,7 +2097,7 @@ object Dedup {
    *      surface under it while RETAINING most postings (≥ half): a
    *      df-HEAD corpus (boilerplate chrome) — run [[prefixJaccardDups]]
    *      with `maxDf`; the cap excises exactly the head (when no
-   *      coordinate exceeds `maxDf` the cap is inert and this is the
+   *      shingle exceeds `maxDf` the cap is inert and this is the
    *      plain lossless prefix route).
    *   3. `minhash_banded` — even the capped surface is over budget, or
    *      capping would excise most postings (dense MUTUAL duplication:
@@ -2136,12 +2106,8 @@ object Dedup {
    *      candidates independent of per-shingle df, at the documented
    *      recall curve.
    *
-   * Everything is integer arithmetic end to end (counts, C(df,2) via
-   * integral DIV, the CASE ladder), so the decision row is exact and
-   * engine-neutral — the contract oracle replays it verbatim. Scale
-   * shape: ONE (group, sh)-keyed aggregate + one group-keyed fold +
-   * one group-keyed distinct count; nothing pairwise anywhere — this
-   * is the plan-before-you-run probe, priced at one corpus pass.
+   * The ladder is integer arithmetic like the probe, so the decision
+   * row is exact and the contract oracle replays it verbatim.
    */
   def autoRoute(docs: DataFrame, idCol: String, textCol: String,
       groupCol: String, maxDf: Long = AutoRouteMaxDf,
@@ -2151,27 +2117,22 @@ object Dedup {
       groupCol, maxDf, budgetPairsPerDoc)
 
   /** [[autoRoute]] over an already-built shingle table (`doc_id`, `sh`,
-    * `groupCol`) — the probe half factored out so [[autoDedupPairs]] can
-    * feed probe AND kernel from ONE shingle derivation (ADVICE r12: the
-    * combined path used to shingle the corpus twice). */
+    * `groupCol`), so [[autoDedupPairs]] can feed probe and kernel from
+    * one shingle derivation. */
   def autoRouteFromShingles(sh: DataFrame, groupCol: String,
       maxDf: Long = AutoRouteMaxDf,
-      budgetPairsPerDoc: Long = AutoRouteBudgetPerDoc): DataFrame = {
-    require(maxDf >= 1 && budgetPairsPerDoc >= 0)
-    val dfs = sh.groupBy(col(groupCol), col("sh"))
-      .agg(count(lit(1)).as("df"))
-    val nd = sh.groupBy(col(groupCol))
+      budgetPairsPerDoc: Long = AutoRouteBudgetPerDoc): DataFrame =
+    routeShingles(sh, Seq(groupCol), maxDf, budgetPairsPerDoc)
+
+  /** The router over `groupCols` (empty = one global row). */
+  private def routeShingles(sh: DataFrame, groupCols: Seq[String],
+      maxDf: Long, budgetPairsPerDoc: Long): DataFrame = {
+    require(budgetPairsPerDoc >= 0,
+      s"budgetPairsPerDoc must be >= 0, got $budgetPairsPerDoc")
+    val nd = sh.groupBy(groupCols.map(col): _*)
       .agg(countDistinct(col("doc_id")).as("n_docs"))
-    dfs.groupBy(col(groupCol))
-      .agg(
-        sum(col("df")).as("postings"),
-        max(col("df")).as("max_df"),
-        sum(expr("df * (df - 1) DIV 2")).as("uncapped_pairs"),
-        sum(when(col("df") <= maxDf, expr("df * (df - 1) DIV 2"))
-          .otherwise(0L)).as("capped_pairs"),
-        sum(when(col("df") <= maxDf, col("df")).otherwise(0L))
-          .as("retained_postings"))
-      .join(nd, groupCol)
+    PairSurface.probe(sh, groupCols, "sh", maxDf)
+      .join(nd, groupCols)
       .withColumn("budget_pairs", col("n_docs") * lit(budgetPairsPerDoc))
       .withColumn("kernel",
         when(col("uncapped_pairs") <= col("budget_pairs"), lit("exact"))
@@ -2179,9 +2140,9 @@ object Dedup {
             col("retained_postings") * lit(2L) >= col("postings"),
             lit("prefix_dfcap"))
           .otherwise(lit("minhash_banded")))
-      .select(col(groupCol), col("n_docs"), col("postings"), col("max_df"),
-        col("uncapped_pairs"), col("capped_pairs"), col("retained_postings"),
-        col("budget_pairs"), col("kernel"))
+      .select((groupCols ++ Seq("n_docs", "postings", "max_df",
+        "uncapped_pairs", "capped_pairs", "retained_postings",
+        "budget_pairs", "kernel")).map(col): _*)
   }
 
   /**
@@ -2192,19 +2153,16 @@ object Dedup {
    * recall curve. The 1-row decision collect is model-sized (the
    * k-means-centroid convention); the shingle table is built ONCE
    * (eager localCheckpoint — the probe executes at call time anyway)
-   * and the checkpoint feeds both the probe aggregate
-   * ([[autoRouteFromShingles]]) and the chosen kernel, so the corpus is
-   * tokenized/shingled exactly one time per call (pinned by
+   * and feeds both the global probe and the chosen kernel, so the
+   * corpus is tokenized/shingled exactly one time per call (pinned by
    * DedupSpec's per-row evaluation counter).
    */
   def autoDedupPairs(docs: DataFrame, idCol: String, textCol: String,
       minJaccard: Double = 0.3, maxDf: Long = AutoRouteMaxDf,
       budgetPairsPerDoc: Long = AutoRouteBudgetPerDoc): DataFrame = {
     val sh = shingles(docs, idCol, textCol).localCheckpoint()
-    val route = autoRouteFromShingles(sh.withColumn("__grp", lit(1)),
-      "__grp", maxDf, budgetPairsPerDoc).select("kernel").collect()
-    val kernel = if (route.isEmpty) "exact" else route(0).getString(0)
-    kernel match {
+    routeShingles(sh, Nil, maxDf, budgetPairsPerDoc)
+      .select("kernel").head().getString(0) match {
       case "exact" =>
         jaccardPairs(sh).where(col("jaccard") >= minJaccard)
           .select("doc0", "doc1", "jaccard")

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.PairSurface
+
 /**
  * Iterative graph analytics over plain edge tables — the ranking side of
  * a crawl/training-data pipeline (CommonCrawl-style host ranking feeds
@@ -186,10 +188,12 @@ object Graph {
    * family). The exact kernel's cost IS its wedge join: Σ C(outdeg, 2)
    * rows through one shuffle — the measured single-box disk wall
    * (43.66 GB written at 100× on the organic co-order graph). One
-   * edge-linear probe prices it: canonicalize, orient by degree, one
-   * out-degree aggregate → `wedges = Σ outdeg·(outdeg−1)/2` (exact
-   * int64, the same orientation the exact kernel runs), against an
-   * edge-LINEAR budget `budgetPerEdge · m`. Two rungs:
+   * edge-linear probe prices it: canonicalize, orient by degree, and
+   * run the global [[graft.core.PairSurface.probe]] keyed by the
+   * oriented source `a` — `wedges` is its `uncapped_pairs`
+   * (Σ C(outdeg, 2), exact int64, the same orientation the exact kernel
+   * runs) and `n_edges` its `postings` — against an edge-LINEAR budget
+   * `budgetPerEdge · m`. Two rungs:
    *
    *  1. `wedges ≤ budget_wedges` → `exact` ([[triangleCounts]] /
    *     the total via [[closedWedges]]) — affordable surfaces should
@@ -217,14 +221,12 @@ object Graph {
   def triangleRoute(edges: DataFrame, budgetPerEdge: Long): DataFrame = {
     require(budgetPerEdge > 0, "budgetPerEdge must be positive")
     val und = canonicalUndirected(edges)
-    val od = orientByDegree(und).groupBy("a").agg(count(lit(1)).as("d"))
-    val counts = und.agg(count(lit(1)).cast("long").as("n_edges"))
     val nodes = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node"))).distinct()
-      .agg(count(lit(1)).cast("long").as("n_nodes"))
-    val wedges = od.agg(coalesce(sum(expr("(d * (d - 1)) div 2")), lit(0L))
-      .cast("long").as("wedges"))
-    nodes.crossJoin(counts).crossJoin(wedges)
+      .agg(count(lit(1)).as("n_nodes"))
+    val surface = PairSurface.probe(orientByDegree(und), Nil, "a")
+      .select(col("postings").as("n_edges"), col("uncapped_pairs").as("wedges"))
+    nodes.crossJoin(surface)
       .withColumn("budget_wedges", col("n_edges") * lit(budgetPerEdge))
       .withColumn("n_colors",
         when(col("wedges") <= col("budget_wedges"), lit(1L))

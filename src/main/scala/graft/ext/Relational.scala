@@ -1084,8 +1084,9 @@ object Relational {
    */
   def basketRules(lineitem: DataFrame, minSupport: Long,
       maxBasket: Long): DataFrame = {
-    require(minSupport >= 1)
-    require(maxBasket >= 2, "a basket needs 2 items to form a pair")
+    require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
+    require(maxBasket >= 2,
+      s"maxBasket must be >= 2 (a basket needs 2 items to form a pair), got $maxBasket")
     val op0 = lineitem.select(col("l_orderkey").as("ok"),
       col("l_partkey").as("p")).distinct()
     val sizes = op0.groupBy("ok").agg(count(lit(1)).as("basket"))

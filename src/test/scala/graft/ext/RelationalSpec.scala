@@ -693,6 +693,16 @@ class RelationalSpec extends SparkSpec {
     cp.foreach(r => assertApprox(r.getAs[Double]("lift"), 1.0))
   }
 
+  test("basketRules: minSupport = 0 and maxBasket = 1 fail with a require naming the parameter") {
+    val li = Seq((1L, 10L), (1L, 20L)).toDF("l_orderkey", "l_partkey")
+    val sup = intercept[IllegalArgumentException](
+      Relational.basketRules(li, minSupport = 0L, maxBasket = 100L))
+    assert(sup.getMessage.contains("minSupport"), sup.getMessage)
+    val cap = intercept[IllegalArgumentException](
+      Relational.basketRules(li, minSupport = 1L, maxBasket = 1L))
+    assert(cap.getMessage.contains("maxBasket"), cap.getMessage)
+  }
+
   test("basket heavy split: m = 2 heavy orders, boundary candidates, and the m >= minSupport fallback") {
     // r14 certification (VERDICT r13 ask #5): the heavy-basket split has
     // only ever been DRIVEN with m = 1 (the skew exhibit). This fixture
