@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.PairSurface
+import graft.text.Tokenizer.tokensSql
 
 /**
  * Document deduplication for training-data pipelines: exact duplicates,
@@ -67,64 +68,67 @@ object Dedup {
   def exactNormalized(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     exact(docs.withColumn(textCol, normalizeText(col(textCol))), idCol, textCol)
 
-  /**
-   * Distinct word-trigram shingles per document, as int64 hashes —
-   * delegates to the row-local HOF spelling ([[shinglesLocal]]): no
-   * window function, so shingling is a pure map stage with ZERO
-   * exchanges — the earlier window-`lead` + `distinct` implementation
-   * cost two shuffles of the exploded token/shingle table before the
-   * first downstream aggregate. Measured wall-clock-neutral at sf0.1 on
-   * local[32] (in-memory shuffles are nearly free); the savings are the
-   * cluster-scale kind, where those exchanges move the whole token
-   * table across the network. Same code path now serves batch and
-   * streaming; the two spellings were pinned value-identical before the
-   * window form was retired.
-   */
+  /** Distinct word-trigram shingles per document, as (doc_id, sh) int64
+    * hashes — [[shinglesK]] at n = 3, the shingle table every dedup
+    * kernel here consumes. */
   def shingles(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    shinglesLocal(docs, idCol, textCol)
+    ngramShingles(docs, idCol, textCol, 3, Nil)
 
-  /**
-   * Row-local spelling of [[shingles]]: the same distinct trigram hashes
-   * computed with array HOFs INSIDE each row — no window function, so it
-   * runs unchanged on unbounded streams (window functions are
-   * batch-only) and skips the per-document sort entirely. Token
-   * adjacency follows the same cleaned token sequence, so the emitted
-   * (doc_id, sh) rows are identical to [[shingles]] (pinned by a spec).
-   * `keepCols` ride along unchanged (e.g. an event-time column a
-   * downstream watermark needs).
-   */
-  /** Token-value array SQL (each cleaned token → int64 hash) — the
-    * shared front half of [[shinglesLocal]] and [[trigramArraySql]].
-    * Token values materialize ONCE into an array (each token feeds up
-    * to three trigrams — recomputing the character probes per trigram
-    * position would triple the hash arithmetic). */
-  private[graft] def tokenValuesSql(textCol: String): String = {
-    val pat = TextAnalysis.WhitespacePattern.replace("\\", "\\\\")
-    s"transform(filter(split($textCol, '$pat'), t -> t <> ''), t -> ${TextHash.tokenValue("t")})"
-  }
-
-  /** The DISTINCT trigram-shingle hashes over a token-value array column,
-    * as ONE array — the row-local kernel [[shinglesLocal]] explodes,
-    * exposed unexploded so zero-join consumers (the Bloom bitmask probe
-    * in [[graft.streaming.DedupStream.cleanStream]]) can test a
-    * document's shingles without leaving its row. Fewer than 3 tokens →
-    * empty array (the CASE guard matters: Spark's `sequence(1, 0)`
-    * counts DOWN, it is not empty). */
-  private[graft] def trigramArraySql(tvsCol: String): String = {
-    def at(off: Int) = s"element_at($tvsCol, i + $off)"
-    s"CASE WHEN size($tvsCol) < 3 THEN CAST(array() AS ARRAY<BIGINT>) ELSE " +
-      s"array_distinct(transform(sequence(1, size($tvsCol) - 2), " +
-      s"i -> ${TextHash.shingleHash(at(0), at(1), at(2))})) END"
-  }
-
+  /** [[shingles]] with `keepCols` riding along unchanged (e.g. an
+    * event-time column a downstream watermark needs). Row-local, so it
+    * runs unchanged on unbounded streams. */
   def shinglesLocal(docs: DataFrame, idCol: String, textCol: String,
       keepCols: Seq[String] = Nil): DataFrame =
+    ngramShingles(docs, idCol, textCol, 3, keepCols)
+
+  /**
+   * Row-local word n-gram shingles for ANY n ≥ 2. The standard
+   * decontamination recipe is 13-gram (GPT-3 appendix C; The Pile):
+   * trigrams flag topical overlap, 13-token runs flag verbatim leakage —
+   * both probes exist because they answer different questions.
+   */
+  def shinglesK(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    ngramShingles(docs, idCol, textCol, n, Nil)
+
+  /** The shinglers' one plan: one token-value array per document, one
+    * explode of its distinct n-gram hashes ([[ngramArraySql]]). Array
+    * HOFs inside each row and no window function, so shingling is a
+    * pure map stage with ZERO exchanges — at cluster scale a window or
+    * `distinct` form would move the whole token table across the
+    * network twice. Documents with fewer than `n` tokens emit nothing. */
+  private def ngramShingles(docs: DataFrame, idCol: String, textCol: String,
+      n: Int, keepCols: Seq[String]): DataFrame =
     docs
       .select(col(idCol).as("doc_id") +: keepCols.map(col) :+
         expr(tokenValuesSql(textCol)).as("tvs"): _*)
-      .where(size(col("tvs")) >= 3)
+      .where(size(col("tvs")) >= n)
       .select(col("doc_id") +: keepCols.map(col) :+
-        explode(expr(trigramArraySql("tvs"))).as("sh"): _*)
+        explode(expr(ngramArraySql("tvs", n))).as("sh"): _*)
+
+  /** Token-value array SQL: each token of the token rule
+    * ([[graft.text.Tokenizer.tokensSql]]) → int64 hash. Token values materialize
+    * ONCE into an array (each token feeds up to n grams — recomputing the
+    * character probes per gram position would multiply the hash
+    * arithmetic). */
+  private[graft] def tokenValuesSql(textCol: String): String =
+    s"transform(${tokensSql(textCol)}, t -> ${TextHash.tokenValue("t")})"
+
+  /** The word `n`-gram hashes ([[ngramHashSql]]) over a token-value array
+    * column as ONE array: the distinct hashes, or with `distinct = false`
+    * every hash in token order. The one n-gram kernel — the shinglers
+    * explode it, [[winnow]] folds over it, and the Bloom probe in
+    * [[graft.streaming.DedupStream.cleanStream]] tests a document's
+    * shingles without leaving its row. Fewer than `n` tokens → empty
+    * array (the CASE guard matters: Spark's `sequence(1, 0)` counts
+    * DOWN, it is not empty). */
+  private[graft] def ngramArraySql(tvsCol: String, n: Int,
+      distinct: Boolean = true): String = {
+    require(n >= 2, s"n must be >= 2, got $n")
+    val h = ngramHashSql((0 until n).map(off => s"element_at($tvsCol, i + $off)"))
+    val grams = s"transform(sequence(1, size($tvsCol) - ${n - 1}), i -> $h)"
+    s"CASE WHEN size($tvsCol) < $n THEN CAST(array() AS ARRAY<BIGINT>) ELSE " +
+      (if (distinct) s"array_distinct($grams)" else grams) + " END"
+  }
 
   /**
    * Exact pairwise shingle-Jaccard for every pair sharing at least one
@@ -455,8 +459,8 @@ object Dedup {
 
   /**
    * Containment near-duplicates over the mod-hash sketch — the
-   * sub-quadratic route [[containmentDups]] lacked (VERDICT r6 "What's
-   * wrong" #1): candidates are pairs sharing a SKETCHED shingle, and the
+   * sub-quadratic route [[containmentDups]] lacks: candidates are
+   * pairs sharing a SKETCHED shingle, and the
    * containment estimate is |sk(A)∩sk(B)| / min(|sk(A)|, |sk(B)|) —
    * Broder's MOD_m estimator with the same min-normalization as the
    * exact kernel. Emits (doc0, doc1, containment, sk0, sk1) at
@@ -630,7 +634,7 @@ object Dedup {
    */
   def spanStats(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    require(n >= 1)
+    require(n >= 1, s"n must be >= 1, got $n")
     val spans = spanHashes(docs, idCol, textCol, n).select("doc_id", "h")
     val dup = spans.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("nd"))
@@ -654,8 +658,7 @@ object Dedup {
     * [[spanStats]] / [[spanScrub]]; the explosion is row-local. */
   private def spanHashes(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    val pat = TextAnalysis.WhitespacePattern.replace("\\", "\\\\")
-    val toks = s"filter(split($textCol, '$pat'), t -> t <> '')"
+    val toks = tokensSql(textCol)
     val windows =
       s"""transform(sequence(1, size(t) - ${n - 1}),
          |  i -> struct(i AS p, sha2(array_join(slice(t, i, $n), ' '), 256) AS h))""".stripMargin
@@ -683,9 +686,8 @@ object Dedup {
    */
   def spanScrub(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    require(n >= 1)
-    val pat = TextAnalysis.WhitespacePattern.replace("\\", "\\\\")
-    val toks = s"filter(split($textCol, '$pat'), t -> t <> '')"
+    require(n >= 1, s"n must be >= 1, got $n")
+    val toks = tokensSql(textCol)
     val spans = spanHashes(docs, idCol, textCol, n)
     val owners = spans.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("owner"))
@@ -1075,7 +1077,7 @@ object Dedup {
   /**
    * Train-corpus decontamination against an evaluation corpus — the
    * benchmark-leakage guard run before every training sweep: for each
-   * train document, how many of its distinct word-trigram shingles also
+   * train document, how many of its distinct word `n`-gram shingles also
    * occur ANYWHERE in the eval corpus, and the contaminated fraction
    * (the decision signal: drop or scrub documents above a threshold).
    *
@@ -1085,16 +1087,13 @@ object Dedup {
    * the shingle hash; the train shingle table streams through it once and
    * aggregates map-side per document. Neither side ever joins train
    * against train: cost is linear in train tokens plus one tiny distinct.
-   * Documents with fewer than 3 tokens have no shingles and produce no
-   * row (nothing to leak through a trigram probe).
+   * Documents with fewer than `n` tokens have no shingles and produce no
+   * row (nothing to leak through an n-gram probe).
    */
   def contamination(train: DataFrame, evalCorpus: DataFrame,
       idCol: String, textCol: String, n: Int = 3): DataFrame =
     contaminationFromShingles(
-      if (n == 3) shingles(train, idCol, textCol)
-      else shinglesK(train, idCol, textCol, n),
-      if (n == 3) shingles(evalCorpus, idCol, textCol)
-      else shinglesK(evalCorpus, idCol, textCol, n))
+      shinglesK(train, idCol, textCol, n), shinglesK(evalCorpus, idCol, textCol, n))
 
   /**
    * Engine-neutral rolling n-gram hash over `n` token-value SQL
@@ -1108,29 +1107,6 @@ object Dedup {
   def ngramHashSql(ts: Seq[String]): String = {
     require(ts.size >= 2)
     ts.tail.foldLeft(ts.head)((acc, t) => s"(($acc) * 31 + $t) % $M")
-  }
-
-  /**
-   * Row-local word n-gram shingles for ANY n ≥ 2 — [[shinglesLocal]]'s
-   * shape with the gram width as a parameter. The standard
-   * decontamination recipe is 13-gram (GPT-3 appendix C; The Pile):
-   * trigrams flag topical overlap, 13-token runs flag verbatim leakage —
-   * both probes exist because they answer different questions. Same
-   * zero-exchange array-HOF plan: one token-value array per document,
-   * one transform over start positions, one explode of the distinct
-   * hashes; runs unchanged on unbounded streams.
-   */
-  def shinglesK(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    require(n >= 2)
-    val pat = TextAnalysis.WhitespacePattern.replace("\\", "\\\\")
-    val tvs =
-      s"transform(filter(split($textCol, '$pat'), t -> t <> ''), t -> ${TextHash.tokenValue("t")})"
-    val h = ngramHashSql((0 until n).map(off => s"element_at(tvs, i + $off)"))
-    val grams = s"transform(sequence(1, size(tvs) - ${n - 1}), i -> $h)"
-    docs
-      .select(col(idCol).as("doc_id"), expr(tvs).as("tvs"))
-      .where(size(col("tvs")) >= n)
-      .select(col("doc_id"), explode(array_distinct(expr(grams))).as("sh"))
   }
 
   /** [[contamination]] from prebuilt (doc_id, sh) tables — the seam that
@@ -1167,8 +1143,8 @@ object Dedup {
    * one row per character of input, linear like any suffix structure.
    *
    * Windows are carried as a FIXED-WIDTH 120-bit hash — two int64
-   * columns `(g1, g2)` cut from sha256 of the window bytes (VERDICT r9
-   * ask #3): the distinct and the probe join exchange 16 bytes per
+   * columns `(g1, g2)` cut from sha256 of the window bytes: the
+   * distinct and the probe join exchange 16 bytes per
    * window instead of the raw `len`-character string (~50 chars, up to
    * ~150 UTF-8 bytes — at 100 TB the string payload IS the shuffle).
    * Identical strings hash identically, so the no-false-negative
@@ -1237,8 +1213,8 @@ object Dedup {
    * document. Linear in train bytes — the same asymptotics as building
    * the suffix array, with Spark's exchange machinery in place of the
    * sort — and never train-vs-train. The exchanged key is 16 bytes per
-   * window (two int64s), not the window string (VERDICT r9 ask #3:
-   * ~6× less exchange payload at the 50-char default).
+   * window (two int64s), not the window string (~6× less exchange
+   * payload at the 50-char default).
    */
   def substringContamination(train: DataFrame, evalCorpus: DataFrame,
       idCol: String, textCol: String, len: Int = SubstrLen): DataFrame = {
@@ -1454,11 +1430,10 @@ object Dedup {
    * Near-dup pairs by SimHash hamming distance — THE DEFAULT ROUTE,
    * which is the WIDE 60-bit sketch with 15-bit pigeonhole banding and
    * the occupancy cap ([[simHashWideDups]]). The narrow 24-bit variant
-   * ([[simHashDups24]]) is a MEASURED scale inversion (bench_sf1.json
-   * r9: 22.8× wall for 10× docs, candidates ~N²/32), so since r10 no
-   * caller can inherit that quadratic by taking the obvious name
-   * (VERDICT r9 ask #2): narrow is reachable only through its explicit
-   * width-suffixed API.
+   * ([[simHashDups24]]) is a MEASURED scale inversion (bench_sf1.json:
+   * 22.8× wall for 10× docs, candidates ~N²/32), so no caller can
+   * inherit that quadratic by taking the obvious name: narrow is
+   * reachable only through its explicit width-suffixed API.
    */
   def simHashDups(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3,
@@ -1480,7 +1455,7 @@ object Dedup {
    * document count — only the ≤ int64 sketches are scanned, but at corpus
    * scale prefer a tighter bound or more chunks).
    *
-   * SCALE CAVEAT (measured, bench_sf1.json r9): complete banding over
+   * SCALE CAVEAT (measured, bench_sf1.json): complete banding over
    * 6-bit chunks is itself ~quadratic — candidates grow ~N²/32 and the
    * sfx1 spot-bench timed this operator at 22× wall for 10× docs. At
    * corpus scale use [[simHashDups]]/[[simHashWideDups]] (15-bit chunks
@@ -1508,11 +1483,11 @@ object Dedup {
     * shingle hashes), banded into 4 fifteen-bit chunks — 32768 values
     * per chunk where [[SimHashBits]]/[[SimHashChunks]]' six-bit chunks
     * have 64. The narrow geometry is a MEASURED scale inversion: the
-    * broadened sfx1 spot-bench (bench_sf1.json r9) timed `dedup_simhash`
+    * broadened sfx1 spot-bench (bench_sf1.json) timed `dedup_simhash`
     * at 22× wall for 10× docs because candidates grow ~N²/2·2^chunkBits —
     * at 64 values per chunk the band join is structurally quadratic
     * (852k candidate pairs at sf0.1, ~85M at sfx1), the same
-    * fixed-width-too-narrow class as the r8 sign-LSH plane bug. 15-bit
+    * fixed-width-too-narrow class as the sign-LSH plane-count bug. 15-bit
     * chunks put the same corpus at 1.9k candidates (sf0.1, measured
     * ~460× fewer) — the [[graft.ext.Multimodal.phashDups]] band geometry
     * exactly, with the same occupancy cap for hot collision classes. */
@@ -2048,13 +2023,7 @@ object Dedup {
    */
   def winnow(docs: DataFrame, idCol: String, textCol: String,
       window: Int = WinnowWindow): DataFrame = {
-    require(window >= 1)
-    val pat = TextAnalysis.WhitespacePattern.replace("\\", "\\\\")
-    val tvs =
-      s"transform(filter(split($textCol, '$pat'), t -> t <> ''), t -> ${TextHash.tokenValue("t")})"
-    def at(off: Int) = s"element_at(tvs, i + $off)"
-    val trigrams =
-      s"transform(sequence(1, size(tvs) - 2), i -> ${TextHash.shingleHash(at(0), at(1), at(2))})"
+    require(window >= 1, s"window must be >= 1, got $window")
     // per window start i: fold the (frame-truncated) slice to its
     // rightmost minimum — `<=` keeps the later index on ties
     val sel =
@@ -2065,9 +2034,9 @@ object Dedup {
         |                   named_struct('pos', CAST(j AS BIGINT), 'fp', element_at(h, j)),
         |                   acc)))))""".stripMargin
     docs
-      .select(col(idCol).as("doc_id"), expr(tvs).as("tvs"))
+      .select(col(idCol).as("doc_id"), expr(tokenValuesSql(textCol)).as("tvs"))
       .where(size(col("tvs")) >= 3)
-      .select(col("doc_id"), expr(trigrams).as("h"))
+      .select(col("doc_id"), expr(ngramArraySql("tvs", 3, distinct = false)).as("h"))
       .select(col("doc_id"), expr(sel).as("s"))
       .select(col("doc_id"), col("s.pos").as("pos"), col("s.fp").as("fp"))
   }

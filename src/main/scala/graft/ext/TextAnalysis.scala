@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.text.Tokenizer
+import graft.text.Tokenizer.tokensSql
+
 /**
  * Text-analysis operators for large-scale training-data pipelines: token
  * statistics / quality scoring, language identification, token counting,
@@ -22,9 +25,6 @@ import org.apache.spark.sql.functions._
  */
 object TextAnalysis {
 
-  /** Default whitespace tokenizer pattern — matches graft.text.Tokenizer. */
-  val WhitespacePattern = "\\s+"
-
   /** English-ish stopword markers used by quality scoring. */
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "to")
 
@@ -36,7 +36,7 @@ object TextAnalysis {
   def tokensWithPosition(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
       .select(col(idCol).as("doc_id"),
-        posexplode(split(col(textCol), WhitespacePattern)).as(Seq("pos", "token")))
+        posexplode(split(col(textCol), Tokenizer.WhitespacePattern)).as(Seq("pos", "token")))
       .where(col("token") =!= "")
 
   /**
@@ -50,7 +50,7 @@ object TextAnalysis {
     // per-document signals never leave their row, so the operator is a
     // pure codegen'd map stage — zero exchanges at any corpus size, and
     // it runs unchanged on unbounded streams (TextOpsStreamSpec).
-    // Documents with no tokens are absent, matching the explode form.
+    // Documents with no tokens are absent (see [[tokenArray]]).
     // `keepCols` ride along unchanged (an event-time column a stream
     // watermark needs, or the text for a later row-local gate).
     val stops = Stopwords.map(s => s"'$s'").mkString("array(", ", ", ")")
@@ -66,18 +66,16 @@ object TextAnalysis {
       .select(col("doc_id") +: keepCols.map(col) :++ signals: _*)
   }
 
-  /** (doc_id, t): the non-empty whitespace tokens as ONE array column —
-    * the row-local front half shared by [[stats]] / [[langId]] /
-    * [[tokenCounts]]. Token-less documents are dropped, mirroring what
-    * posexplode + groupBy produced before these became map stages. */
+  /** (doc_id, t): the document's tokens ([[Tokenizer.tokensSql]]) as ONE
+    * array column — the row-local front half shared by [[stats]] /
+    * [[langId]] / [[tokenCounts]] / [[blocklistGate]]. Token-less
+    * documents (empty, whitespace-only or null text) are dropped. */
   private[ext] def tokenArray(docs: DataFrame, idCol: String, textCol: String,
-      keepCols: Seq[String] = Nil): DataFrame = {
-    val pat = WhitespacePattern.replace("\\", "\\\\")
+      keepCols: Seq[String] = Nil): DataFrame =
     docs
       .select(col(idCol).as("doc_id") +: keepCols.map(col) :+
-        expr(s"filter(split($textCol, '$pat'), x -> x <> '')").as("t"): _*)
+        expr(tokensSql(textCol)).as("t"): _*)
       .where(size(col("t")) > 0)
-  }
 
   /**
    * Composite C4/Gopher-style quality gate over [[stats]]'s cheap
@@ -605,28 +603,23 @@ object TextAnalysis {
    */
   def blocklistGate(docs: DataFrame, idCol: String, textCol: String,
       patterns: Seq[String], maxDensity: Double): DataFrame = {
-    require(patterns.nonEmpty && maxDensity >= 0.0)
-    val snap6 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(1e6) + lit(0.50001)) / lit(1e6)
-    val pat = WhitespacePattern.replace("\\", "\\\\")
+    require(patterns.nonEmpty, "patterns must be non-empty")
+    require(maxDensity >= 0.0, s"maxDensity must be >= 0, got $maxDensity")
     // patterns enter as Column LITERALS, never spliced into SQL text:
     // Spark string literals are backslash-escaped (NOT SQL-standard ''
     // doubling — 'it''s' parses as adjacent literals 'its'), so any
     // quoting scheme written into expr() silently mis-parses some
     // pattern; lit() sidesteps parsing entirely
     val patArr = array(patterns.map(lit): _*)
-    docs
-      .select(col(idCol).as("doc_id"),
-        expr(s"filter(split($textCol, '$pat'), x -> x <> '')").as("t"))
-      .where(size(col("t")) > 0)
+    tokenArray(docs, idCol, textCol)
       .select(col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
         size(filter(col("t"), x => array_contains(patArr, x)))
           .cast("long").as("n_hits"))
       .select(col("doc_id"), col("n_tokens"), col("n_hits"),
-        snap6(col("n_hits").cast("double") / col("n_tokens").cast("double"))
+        snapCol(col("n_hits").cast("double") / col("n_tokens").cast("double"))
           .as("density"),
-        (snap6(col("n_hits").cast("double") / col("n_tokens").cast("double"))
+        (snapCol(col("n_hits").cast("double") / col("n_tokens").cast("double"))
           > lit(maxDensity)).as("blocked"))
   }
 
@@ -718,8 +711,7 @@ object TextAnalysis {
     val dtf = pin(docs
       .select(col(idCol).as("doc_id"),
         when(col(srcCol) === target, 1L).otherwise(0L).as("is_target"),
-        explode(split(col(textCol), WhitespacePattern)).as("token"))
-      .where(col("token") =!= "")
+        explode(expr(tokensSql(textCol))).as("token"))
       .select(col("doc_id"), col("is_target"), bucket.as("j"))
       .groupBy("doc_id", "is_target", "j")
       .agg(count(lit(1)).as("tf")))
@@ -759,8 +751,7 @@ object TextAnalysis {
     val bucket = expr(s"CAST((${TextHash.avalancheSql(TextHash.tokenValue("token"), DsirSalt)}) % $dim AS BIGINT)")
     val counts = docs
       .select(when(col(srcCol) === target, 1L).otherwise(0L).as("is_target"),
-        explode(split(col(textCol), WhitespacePattern)).as("token"))
-      .where(col("token") =!= "")
+        explode(expr(tokensSql(textCol))).as("token"))
       .select(col("is_target"), bucket.as("j"))
       .groupBy("j").agg(
         sum(col("is_target")).as("ct"),
@@ -790,12 +781,11 @@ object TextAnalysis {
       lw: Array[Double], dim: Int = DsirDim): DataFrame = {
     require(lw.length == dim, s"table length ${lw.length} != dim $dim")
     val arr = lw.map(v => s"CAST('$v' AS DOUBLE)").mkString("array(", ", ", ")")
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     val bucketX =
       s"CAST((${TextHash.avalancheSql(TextHash.tokenValue("x"), DsirSalt)}) % $dim AS INT) + 1"
     docs
       .select(col(idCol).as("doc_id"),
-        expr(s"filter(split($textCol, '$pat'), x -> x <> '')").as("toks"))
+        expr(tokensSql(textCol)).as("toks"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
         expr(s"aggregate(toks, CAST(0.0 AS DOUBLE), (a, x) -> a + element_at($arr, $bucketX))")
@@ -1067,7 +1057,7 @@ object TextAnalysis {
         |  s -> s.best)""".stripMargin
     docs
       .select(col(idCol).as("doc_id"),
-        expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("w"))
+        expr(tokensSql(textCol)).as("w"))
       .where(size(col("w")) >= 2)
       .select(col("doc_id"), expr(bigramsExpr).as("bg"))
       .select(
@@ -1438,7 +1428,7 @@ object TextAnalysis {
   /** Snap a double column to the 1e-6 comparison grid (biased floor —
     * the [[graft.entry.EntryUtil.gate]] convention). Package-visible so
     * composed pipelines ([[Pipelines.selectCorpus]]) reuse THIS spelling
-    * instead of inlining a copy that could drift (ADVICE r8). */
+    * instead of inlining a copy that could drift. */
   private[ext] def snapCol(c: Column) =
     floor(c * lit(1e6) + lit(0.50001)) / lit(1e6)
 
@@ -1481,11 +1471,9 @@ object TextAnalysis {
    */
   def corpusMix(docs: DataFrame, textCol: String, dims: Seq[String]): DataFrame = {
     require(dims.nonEmpty)
-    // same tokenization as tokensWithPosition, from the one constant
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     docs
       .withColumn("nt",
-        expr(s"size(filter(split($textCol, '$pat'), t -> t <> ''))").cast("long"))
+        expr(s"size(${tokensSql(textCol)})").cast("long"))
       .groupBy(dims.map(col): _*)
       .agg(
         count(lit(1)).as("n_docs"),
@@ -1511,13 +1499,12 @@ object TextAnalysis {
   def packSequences(docs: DataFrame, idCol: String, textCol: String,
       budgetTokens: Int, buckets: Int): DataFrame = {
     require(budgetTokens > 0 && buckets > 0)
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("bucket").orderBy("doc_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     docs
       .select(col(idCol).as("doc_id"),
-        expr(s"size(filter(split($textCol, '$pat'), t -> t <> ''))")
+        expr(s"size(${tokensSql(textCol)})")
           .cast("long").as("nt"))
       .where(col("nt") > 0)
       .withColumn("bucket", pmod(col("doc_id"), lit(buckets.toLong)))
@@ -1538,13 +1525,11 @@ object TextAnalysis {
     // Row-local HOF spelling (cf. [[stats]]). Positions must be the RAW
     // split slots — empty tokens keep their index and contribute 0 —
     // exactly reproducing tokensWithPosition's numbering; integer
-    // addition is order-independent, so the sum matches the old
-    // aggregate bit-for-bit.
-    val pat = WhitespacePattern.replace("\\", "\\\\")
+    // addition is order-independent, so the sum is exact.
     val term = TextHash.fingerprintTerm("i", "tok")
     docs
       .select(col(idCol).as("doc_id"),
-        expr(s"split($textCol, '$pat')").as("raw"))
+        split(col(textCol), Tokenizer.WhitespacePattern).as("raw"))
       .where(expr("size(filter(raw, x -> x <> ''))") > 0)
       .select(col("doc_id"),
         expr(s"""aggregate(
@@ -1618,8 +1603,8 @@ object TextAnalysis {
 
   /**
    * PII scrub v2 — [[piiScrub]]'s three classes plus card numbers
-   * (Luhn-checked), IBAN-shaped account numbers, and dashed SSNs
-   * (VERDICT r6 ask #6). Staged so overlapping pattern languages
+   * (Luhn-checked), IBAN-shaped account numbers, and dashed SSNs.
+   * Staged so overlapping pattern languages
    * attribute each span to exactly one class, most-specific first:
    * emails → IBANs (their digit tails would otherwise feed the card
    * pattern — DE44 5001 0517 5407 3249 31 contains 18 straight digits)
@@ -1861,7 +1846,7 @@ object TextAnalysis {
     val cp = cb.groupBy("w1").agg(sum(col("cb")).as("cp"))
     // op order below (cast placement, +1 before cast, λ·ratio + (1−λ)·pu)
     // is mirrored TOKEN-FOR-TOKEN in the oracle SQL; ln/exp ulp and
-    // avg sum-order noise sit far below the r6 rounding grid
+    // avg sum-order noise sit far below the 1e-6 rounding grid
     val pu = (coalesce(col("cu"), lit(0L)) + lit(1L)).cast("double") /
       (col("tt") + col("vv") + lit(1L)).cast("double")
     val p = when(col("cp").isNull, pu)
@@ -1905,9 +1890,8 @@ object TextAnalysis {
    */
   def corpusDivergence(docs: DataFrame, textCol: String,
       groupCol: String): DataFrame = {
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     val t = docs.select(col(groupCol).as("grp"),
-      explode(expr(s"filter(split($textCol, '$pat'), x -> x <> '')")).as("token"))
+      explode(expr(tokensSql(textCol))).as("token"))
     val slice = t.groupBy("grp", "token").agg(count(lit(1)).as("c"))
     val sliceTot = slice.groupBy("grp").agg(sum(col("c")).as("tg"))
     val glob = t.groupBy("token").agg(count(lit(1)).as("cg"))
@@ -1941,10 +1925,9 @@ object TextAnalysis {
   def vocabTopKByGroup(docs: DataFrame, idCol: String, textCol: String,
       groupCol: String, k: Int): DataFrame = {
     require(k > 0)
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     val df = docs
       .select(col(groupCol).as("grp"), col(idCol).as("doc_id"),
-        expr(s"filter(split($textCol, '$pat'), x -> x <> '')").as("t"))
+        expr(tokensSql(textCol)).as("t"))
       .select(col("grp"), col("doc_id"),
         explode(array_distinct(col("t"))).as("token"))
       .groupBy("grp", "token").agg(count(lit(1)).as("doc_freq"))
@@ -1977,9 +1960,8 @@ object TextAnalysis {
       groupCols: Seq[String]): DataFrame = {
     require(groupCols.nonEmpty)
     val g = groupCols.map(col)
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     val base = docs.select(g ++ Seq(
-      expr(s"filter(split($textCol, '$pat'), x -> x <> '')").as("t"),
+      expr(tokensSql(textCol)).as("t"),
       length(col(textCol)).cast("long").as("nc")): _*)
     val totals = base.groupBy(g: _*).agg(
       count(lit(1)).as("n_docs"),
@@ -2024,13 +2006,12 @@ object TextAnalysis {
   def budgetSample(docs: DataFrame, idCol: String, textCol: String,
       groupCol: String, budgetTokens: Long, salt: Long = 0L): DataFrame = {
     require(budgetTokens > 0)
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("grp").orderBy(col("h").asc, col("doc_id").asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     docs
       .select(col(idCol).as("doc_id"), col(groupCol).as("grp"),
-        expr(s"size(filter(split($textCol, '$pat'), t -> t <> ''))")
+        expr(s"size(${tokensSql(textCol)})")
           .cast("long").as("nt"))
       .where(col("nt") > 0)
       .withColumn("h", Export.mixBucket(col("doc_id"), Int.MaxValue, salt))
@@ -2057,7 +2038,6 @@ object TextAnalysis {
    * the harness's 1e-6 snap.
    */
   def tokenEntropy(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     // state: previous token, current run length, distinct-run count, Σ c·ln c
     val fold =
       """aggregate(
@@ -2074,7 +2054,7 @@ object TextAnalysis {
         |      CAST(st.run AS DOUBLE) * ln(CAST(st.run AS DOUBLE)), 0.0D)))""".stripMargin
     docs
       .select(col(idCol).as("doc_id"),
-        expr(s"filter(split($textCol, '$pat'), t -> t <> '')").as("w"))
+        expr(tokensSql(textCol)).as("w"))
       .where(size(col("w")) >= 1)
       .select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
         expr(fold).as("st"))
@@ -2113,9 +2093,8 @@ object TextAnalysis {
   def pmiBigrams(docs: DataFrame, idCol: String, textCol: String,
       minCount: Long, k: Int): DataFrame = {
     require(minCount >= 1 && k > 0)
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     val pairs = docs
-      .select(expr(s"filter(split($textCol, '$pat'), t -> t <> '')").as("w"))
+      .select(expr(tokensSql(textCol)).as("w"))
       .where(size(col("w")) >= 2)
       .select(explode(expr(
         """transform(sequence(0, size(w) - 2),
@@ -2166,10 +2145,9 @@ object TextAnalysis {
   def clusterTerms(docs: DataFrame, idCol: String, textCol: String,
       clusterCol: String, k: Int): DataFrame = {
     require(k > 0)
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     val tf = docs
       .select(col(clusterCol).as("cluster"),
-        explode(expr(s"filter(split($textCol, '$pat'), x -> x <> '')")).as("token"))
+        explode(expr(tokensSql(textCol))).as("token"))
       .groupBy("cluster", "token")
       .agg(count(lit(1)).as("tf"))
     val termTotal = tf.groupBy("token").agg(sum("tf").as("f_t"))
@@ -2282,8 +2260,7 @@ object TextAnalysis {
     val symTotal = sum(col("c") * col("n_syms"))
     docs
       .select(col(langCol).as("lang"),
-        explode(split(col(textCol), WhitespacePattern)).as("word"))
-      .where(col("word") =!= "")
+        explode(expr(tokensSql(textCol))).as("word"))
       .groupBy("lang", "word").agg(count(lit(1)).as("c"))
       .join(nsyms, "word")
       .groupBy("lang")
@@ -2305,9 +2282,8 @@ object TextAnalysis {
   private def bpeFit(docs: DataFrame, textCol: String, rounds: Int,
       rewriteLast: Boolean): (Seq[(Long, String, String, Long)], DataFrame) = {
     require(rounds > 0)
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     val words = docs
-      .select(explode(expr(s"filter(split($textCol, '$pat'), x -> x <> '')")).as("word"))
+      .select(explode(expr(tokensSql(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
     var syms = words.select(col("word"), col("n"),
       expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))").as("s"))
@@ -2354,7 +2330,7 @@ object TextAnalysis {
   /**
    * Unigram-LM (SentencePiece-style, Kudo 2018) tokenizer training —
    * the OTHER half of the production tokenizer story next to
-   * [[bpeMerges]] (VERDICT r9 ask #6): instead of greedy merge rules,
+   * [[bpeMerges]]: instead of greedy merge rules,
    * fit a piece-probability model by hard EM over word types:
    *
    *   1. SEED: all single characters plus the [[UniSeedMulti]] most
@@ -2429,7 +2405,7 @@ object TextAnalysis {
     * → `iters` hard-EM rounds. Returns (words, final vocab with counts
     * and snapped log-probs, final segmentation (word, n, pieces)).
     *
-    * `charCoverage` (r11, VERDICT r10 ask #7 — SentencePiece's
+    * `charCoverage` (SentencePiece's
     * character-coverage guarantee): with it OFF, a single-character
     * piece whose every occurrence gets absorbed by a longer piece in
     * the E-step has zero count and DROPS in the M-step, so a vocabulary
@@ -2445,9 +2421,8 @@ object TextAnalysis {
   private[ext] def unigramFit(docs: DataFrame, textCol: String,
       iters: Int, charCoverage: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
     require(iters >= 1)
-    val pat = WhitespacePattern.replace("\\", "\\\\")
     val words = docs
-      .select(explode(expr(s"filter(split($textCol, '$pat'), x -> x <> '')")).as("word"))
+      .select(explode(expr(tokensSql(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
       .localCheckpoint()
     // every substring occurrence up to UniMaxPiece chars, freq-weighted
@@ -2590,7 +2565,7 @@ object TextHash {
   /**
    * FULL-STRING Horner char fold, bounded < M — the id-hash value for
    * paths that hash DOCUMENT/VECTOR IDS rather than vocabulary tokens
-   * (r11, after the sfx10 IVF hot-spot): [[tokenValue]] probes only
+   * (the IVF sub-split needs injective ids): [[tokenValue]] probes only
    * (length, first, middle, last), which is fine for natural-language
    * vocabularies but collapses INTEGER-STRING id spaces into ~9k
    * collision classes — at 100k sequential ids every class holds ~11
@@ -2603,7 +2578,7 @@ object TextHash {
    * spelling for the oracles — INCLUDING the empty string: Spark's
    * `sequence(1, 0)` yields the DESCENDING [1, 0] (a two-step fold over
    * `ascii('') = 0`), while DuckDB's `range(1, 1)` is empty, so the raw
-   * fold would return 6727 vs 7 on '' (ADVICE r11) — the CASE guard
+   * fold would return 6727 vs 7 on '' — the CASE guard
    * below pins both spellings to the seed 7 there.
    */
   def charFold(c: String): String =

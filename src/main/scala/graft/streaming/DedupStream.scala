@@ -64,8 +64,8 @@ object DedupStream {
 
   /**
    * Streaming EXACT-SUBSTRING decontamination guard — the ingest-time
-   * form of [[graft.ext.Dedup.substringContamination]] (VERDICT r9 ask
-   * #7): flag arriving documents containing ANY `len`-character window
+   * form of [[graft.ext.Dedup.substringContamination]]: flag arriving
+   * documents containing ANY `len`-character window
    * that occurs verbatim, at any alignment, in a STATIC eval-corpus
    * window table (`evalGrams` = [[graft.ext.Dedup.substringGrams]] over
    * the eval slice, materialized to parquet at eval-set build time —
@@ -180,7 +180,7 @@ object DedupStream {
         minAvgTokenLen, maxAvgTokenLen, maxStopwordRatio, minTtr))
       .withColumn("tvs", expr(Dedup.tokenValuesSql(textCol)))
       .where(expr(
-        s"NOT exists(${Dedup.trigramArraySql("tvs")}, sh -> $allHashesSet)"))
+        s"NOT exists(${Dedup.ngramArraySql("tvs", 3)}, sh -> $allHashesSet)"))
       .select(col("doc_id"), col(tsCol), col("n_tokens"))
   }
 
@@ -229,8 +229,8 @@ object DedupStream {
    * to that latest version (and exclude ids re-ingested by the CURRENT
    * batch), so verification never mixes a stale text's shingles with the
    * replacement's — re-ingesting a changed doc yields pairs computed
-   * against current versions only (r7; the merge-corruption this used to
-   * cause was the reason compaction was load-bearing). Superseded rows
+   * against current versions only (mixing versions corrupts the
+   * Jaccard, which would make compaction load-bearing). Superseded rows
    * and the stale pairs derived from them remain ON DISK until
    * [[compactIndex]] reclaims them; read them through [[currentPairs]] /
    * [[currentShingles]], which apply the same latest-version rule.
@@ -252,8 +252,8 @@ object DedupStream {
     // roll back any interrupted directory swap before probing existence
     recoverIndex(spark, indexDir)
     // Hadoop FS probe, NOT java.io.File — the index may live on HDFS/S3
-    // where a local-File isDirectory is always false (ADVICE: a remote
-    // indexDir would silently behave as an empty index every batch).
+    // where a local-File isDirectory is always false (a remote indexDir
+    // would silently behave as an empty index every batch).
     def readOr(path: String, like: DataFrame): DataFrame = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -280,7 +280,7 @@ object DedupStream {
     val newIds = batch.select(col(idCol).as("doc_id")).distinct()
     // history at CURRENT versions only: per doc its latest prior batch's
     // rows, minus ids this batch re-ingests (their new version supersedes
-    // — mixing both versions' shingles corrupted the Jaccard before r7).
+    // — mixing both versions' shingles corrupts the Jaccard).
     // Versions come from the seen/ roster, which records even shingle-less
     // ingests. Costs one (doc_id, batch_id)-column aggregate over the
     // roster scan — no text is touched, so the batch stays delta-shaped.
@@ -343,7 +343,7 @@ object DedupStream {
    * `seen/` roster — which records every ingested doc, INCLUDING ones
    * whose text was too short to shingle (a shingle-derived version map
    * would leave such a re-ingest's superseded version visible forever).
-   * Pre-r7 indexes without a roster fall back to the shingle table.
+   * Older indexes without a roster fall back to the shingle table.
    * Public so a composed pipeline ([[graft.ext.Pipelines
    * .incrementalClean]]) can compute it ONCE, pin it, and pass it to
    * [[currentShingles]]/[[currentPairs]] instead of re-aggregating the
@@ -448,12 +448,12 @@ object DedupStream {
     def path(s: String) = new org.apache.hadoop.fs.Path(s)
     recoverIndex(spark, indexDir)
     // nothing ingested yet (or index dir absent): no-op instead of a
-    // PATH_NOT_FOUND from the unconditional reads (ADVICE r5)
+    // PATH_NOT_FOUND from the unconditional reads
     if (!fs.exists(path(live("shingles"))) || !fs.exists(path(live("bands"))))
       return
     // latest ingested batch per doc — from the seen/ roster (covers
-    // shingle-less versions; falls back to the shingle table on pre-r7
-    // indexes), the same rule every reader applies
+    // shingle-less versions; falls back to the shingle table on older
+    // indexes without one), the same rule every reader applies
     val sh = spark.read.parquet(live("shingles"))
     val bands = spark.read.parquet(live("bands"))
     val latest = latestBatchesIn(spark, indexDir, excludeBatch = None)
@@ -483,8 +483,8 @@ object DedupStream {
       keptSh.write.mode("overwrite").partitionBy("batch_id").parquet(tmp("shingles"))
       keptBands.write.mode("overwrite").partitionBy("batch_id").parquet(tmp("bands"))
       dups.write.mode("overwrite").partitionBy("batch_id").parquet(tmp("dups"))
-      // the roster compacts to one (doc, latest-batch) row per doc; a
-      // pre-r7 index without one simply skips the fourth swap
+      // the roster compacts to one (doc, latest-batch) row per doc; an
+      // older index without one simply skips the fourth swap
       val hasSeen = fs.exists(path(live("seen")))
       if (hasSeen)
         latest.write.mode("overwrite").partitionBy("batch_id").parquet(tmp("seen"))

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.MatrixElement
@@ -12,26 +12,35 @@ import graft.core.MatrixElement
  *
  * The reference tokenizes with the ansj Chinese segmenter (an external dep,
  * pom.xml:14) inside a typed `flatMap`, with stop words collected to the
- * driver. We rebuild it declaratively: `explode(split(...))` keeps the
- * pipeline inside Catalyst (codegen'd, prunable), and stop-word removal is a
- * broadcast left-anti join — no driver-side collect, no per-row JVM object
- * churn. The tokenizer pattern is pluggable (whitespace default) since ansj
- * is both unavailable offline and irrelevant to the engine's semantics.
+ * driver. We rebuild it declaratively: `explode` over a SQL token array
+ * keeps the pipeline inside Catalyst (codegen'd, prunable), and stop-word
+ * removal is a broadcast left-anti join — no driver-side collect, no
+ * per-row JVM object churn.
+ *
+ * THE TOKEN RULE: a token is a non-empty piece of the text split on
+ * [[WhitespacePattern]]. [[tokensSql]] is its one spelling; every text,
+ * dedup and corpus operator in graft.ext and graft.streaming builds on it,
+ * so token counts agree across operators by construction. (Only
+ * `TextAnalysis.tokensWithPosition` and `fingerprint` split on the
+ * pattern themselves: they number the empty slots too, on purpose.)
  */
 object Tokenizer {
 
-  /** Split a text column into one token per row; drops empty tokens. */
-  def tokens(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      pattern: String = "\\s+",
-      lowercase: Boolean = false): DataFrame = {
-    val txt = if (lowercase) lower(col(textCol)) else col(textCol)
-    docs
-      .select(col(idCol).as("doc"), explode(split(txt, pattern)).as("token"))
-      .where(col("token") =!= "")
-  }
+  /** The one token separator: runs of Java-regex whitespace. */
+  val WhitespacePattern = "\\s+"
+
+  /** SQL text for the array of non-empty tokens of `textCol` (a column
+    * name or SQL expression) — the token rule. Null text gives null.
+    * Spelled with `array_remove`, not a `filter` lambda: `split` and
+    * `array_remove` are whole-stage code-generated, a higher-order
+    * function is evaluated interpreted (~1.5× slower to tokenize 200k
+    * documents on a 4-core host). */
+  def tokensSql(textCol: String): String =
+    s"array_remove(split($textCol, '${WhitespacePattern.replace("\\", "\\\\")}'), '')"
+
+  /** One (doc, token) row per token of the token rule. */
+  def tokens(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc"), explode(expr(tokensSql(textCol))).as("token"))
 
   /** Character class of scripts written without word separators (Han +
     * kana + Hangul) — the scripts [[tokensCjk]]'s bigram fallback covers. */
@@ -42,41 +51,31 @@ object Tokenizer {
    * text. The reference's own demo corpus is Chinese (reference
    * src/test/data/ articles), segmented there by the external ansj library
    * (KeyWordsDemo.scala:47–58, pom.xml:14) — unavailable offline and
-   * external to the engine's semantics; a whitespace pattern yields one
+   * external to the engine's semantics; a whitespace split yields one
    * useless whole-sentence token per line on such text. Character
    * bigrams are the standard segmentation-free substitute (Lucene's
    * CJKAnalyzer does the same): each maximal CJK run emits its
    * overlapping 2-char grams (an isolated single CJK char emits itself),
-   * while non-CJK stretches still split on `pattern` exactly as
-   * [[tokens]] does, so mixed-script corpora keep word tokens for the
-   * Latin parts.
+   * while non-CJK stretches keep the token rule exactly as [[tokens]]
+   * does, so mixed-script corpora keep word tokens for the Latin parts.
    *
    * Mechanics are pure SQL — two `regexp_replace` passes isolate CJK
-   * runs with spaces, then split + HOF `transform` + `explode` emit the
-   * grams. Everything stays inside whole-stage codegen (no UDF), and at
-   * scale the stage remains a pure map over the document table, exactly
-   * like [[tokens]].
+   * runs with spaces, then [[tokens]] + HOF `transform` + `explode` emit
+   * the grams. No UDF, and at scale the stage remains a pure map over
+   * the document table, exactly like [[tokens]].
    */
-  def tokensCjk(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      pattern: String = "\\s+",
-      lowercase: Boolean = false): DataFrame = {
-    val txt = if (lowercase) lower(col(textCol)) else col(textCol)
+  def tokensCjk(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // space-separate every boundary between a CJK and a non-CJK char, so
     // after the whitespace split each segment is either a pure CJK run or
     // ordinary non-CJK text
     val sep = regexp_replace(
-      regexp_replace(txt, s"([$CjkClass])([^$CjkClass])", "$1 $2"),
+      regexp_replace(col(textCol), s"([$CjkClass])([^$CjkClass])", "$1 $2"),
       s"([^$CjkClass])([$CjkClass])", "$1 $2")
-    docs
-      .select(col(idCol).as("doc"), explode(split(sep, pattern)).as("seg"))
-      .where(col("seg") =!= "")
+    tokens(docs.withColumn(textCol, sep), idCol, textCol)
       .select(col("doc"), explode(
-        when(col("seg").rlike(s"^[$CjkClass]{2,}$$"),
-          expr("transform(sequence(1, length(seg) - 1), i -> substr(seg, i, 2))"))
-          .otherwise(array(col("seg")))).as("token"))
+        when(col("token").rlike(s"^[$CjkClass]{2,}$$"),
+          expr("transform(sequence(1, length(token) - 1), i -> substr(token, i, 2))"))
+          .otherwise(array(col("token")))).as("token"))
   }
 
   /**

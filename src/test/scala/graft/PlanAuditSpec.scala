@@ -122,8 +122,9 @@ class PlanAuditSpec extends SparkSpec {
       // graph_degree_stats / vocab_kmv_audit shape; the Lloyd fit and
       // moment aggregates feeding them are equi-join/aggregate only
       "ann_auto",
-      // the triangle router's three 1-row surface frames (nodes, edges,
-      // wedge sum) crossed into one decision row per regime, and the
+      // the triangle router's two 1-row surface frames (node count; edge
+      // count and wedge sum from one probe) crossed into one decision
+      // row per regime, and the
       // colorful kernel's 1-row sampled-edge count crossed with its
       // 1-row triangle count — the same sanctioned scalar-cross shape
       "graph_triangles_auto", "graph_triangles_colorful",

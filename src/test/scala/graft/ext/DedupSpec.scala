@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression
 
 import graft.SparkSpec
 
@@ -630,6 +631,19 @@ class DedupSpec extends SparkSpec {
     val b = Dedup.shinglesK(docs, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b && a.nonEmpty)
+  }
+
+  test("ngramHashSql of three values parses to shingleHash's expression tree") {
+    assert(parseExpression(Dedup.ngramHashSql(Seq("a", "b", "c"))) ==
+      parseExpression(TextHash.shingleHash("a", "b", "c")))
+  }
+
+  test("the n-gram kernel at n = 3 parses to the distinct-trigram spelling") {
+    def at(off: Int) = s"element_at(tvs, i + $off)"
+    val trigramSet = "CASE WHEN size(tvs) < 3 THEN CAST(array() AS ARRAY<BIGINT>) ELSE " +
+      "array_distinct(transform(sequence(1, size(tvs) - 2), " +
+      s"i -> ${TextHash.shingleHash(at(0), at(1), at(2))})) END"
+    assert(parseExpression(Dedup.ngramArraySql("tvs", 3)) == parseExpression(trigramSet))
   }
 
   test("13-gram probe flags a 13-token verbatim run, not a 12-token one") {
