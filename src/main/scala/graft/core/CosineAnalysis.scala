@@ -287,7 +287,7 @@ final class CosineAnalysis(
    * re-derives the source scan → matrix aggregate → normalize join once
    * per consumer (measured: cosine_topk re-scanned the fact table 8× at
    * sf0.1 — 20 Exchanges for a V=1,000 pipeline). Pass
-   * `pin = _.localCheckpoint()` (the Graph/SparseAnn convention) to
+   * `pin = _.localCheckpoint()` (the SparseAnn convention) to
    * derive it once; the default `identity` keeps the library's lazy
    * one-shot-plan contract. Results are pin-invariant (double sums ride
    * the contract's 1e-6 snap).

@@ -205,14 +205,8 @@ object RelationalEntries {
     // ext: triangle counts over the co-ordered-parts graph (parts
     // sharing an order are adjacent); degree-ordered node-iterator —
     // exact integer counts, all equi-joins
-    "graph_triangles" -> ((s, dir) => {
-      val li = Relational.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      val edges = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("src"), col("b.p").as("dst"))
-      gate(Graph.triangleCounts(edges), "node")
-    }),
+    "graph_triangles" -> ((s, dir) =>
+      gate(Graph.triangleCounts(coOrderedPartEdges(s, dir)), "node")),
     // ext: market-basket rules — support/confidence/lift for directed
     // co-ordered part pairs above min support; exact int64 counts, the
     // canonical order-keyed pair join, result-sized support joins.
@@ -245,15 +239,9 @@ object RelationalEntries {
         pin = _.localCheckpoint()), "o_custkey")),
     // ext: 1-row structural profile of the same graph — degree moments
     // + Newman assortativity; exact int64 sums, double-only final ratio
-    "graph_degree_stats" -> ((s, dir) => {
-      val li = Relational.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      val edges = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("src"), col("b.p").as("dst"))
-      gate(Graph.degreeStats(edges), "n_nodes")
-    }),
-    // THE TRIANGLE KERNEL ROUTER (r13): "exact wedge join or sampled
+    "graph_degree_stats" -> ((s, dir) =>
+      gate(Graph.degreeStats(coOrderedPartEdges(s, dir)), "n_nodes")),
+    // THE TRIANGLE KERNEL ROUTER: "exact wedge join or sampled
     // estimate" answered from the measured wedge surface — the
     // dedup_auto / cosine_auto / ann_auto pattern applied to the fourth
     // quadratic-prone family, aimed straight at the measured 100×
@@ -294,124 +282,68 @@ object RelationalEntries {
     // ext: fixed-round k-core peeling on the same co-ordered-parts
     // graph — per round two survivor semi-joins + one degree aggregate;
     // exact integer degrees, monotone shrink
-    "graph_kcore" -> ((s, dir) => {
-      val li = Relational.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      val edges = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("src"), col("b.p").as("dst"))
-      gate(Graph.kCoreAlive(edges, KCoreK, KCoreRounds,
-        pin = _.localCheckpoint()), "node")
-    }),
+    "graph_kcore" -> ((s, dir) =>
+      gate(Graph.kCoreAlive(coOrderedPartEdges(s, dir), KCoreK, KCoreRounds),
+        "node")),
     // ext: the TRUE k-core — the same peel driven to its fixed point
     // with a measured per-round survivor count deciding the stop
-    // (Graph.kCoreFixpoint, r8 ask #5); the oracle unrolls the full
-    // round budget, safe because post-fixpoint rounds are identity
-    "graph_kcore_fixpoint" -> ((s, dir) => {
-      val li = Relational.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      val edges = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("src"), col("b.p").as("dst"))
-      gate(Graph.kCoreFixpoint(edges, KCoreK, GraphMaxRounds,
-        pin = _.localCheckpoint()).core, "node")
-    }),
+    // (Graph.kCoreFixpoint); the oracle unrolls the full round
+    // budget, safe because post-fixpoint rounds are identity
+    "graph_kcore_fixpoint" -> ((s, dir) =>
+      gate(Graph.kCoreFixpoint(coOrderedPartEdges(s, dir), KCoreK,
+        GraphMaxRounds).core, "node")),
     // ext: fixed-round label-propagation communities on the same
     // co-ordered-parts graph — plurality neighbor label, min-label
     // ties, self-loop vote (Graph.labelPropagation); splits the graph
     // along its dense regions where CC merges everything that touches
-    "graph_lpa" -> ((s, dir) => {
-      val li = Relational.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      val edges = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("src"), col("b.p").as("dst"))
-      gate(Graph.labelPropagation(edges, LpaRounds,
-        pin = _.localCheckpoint()), "node")
-    }),
+    "graph_lpa" -> ((s, dir) =>
+      gate(Graph.labelPropagation(coOrderedPartEdges(s, dir), LpaRounds), "node")),
     // ext: LPA run to its zero-change round (Graph
-    // .labelPropagationConverged, r8 ask #5) — the stop is measured per
-    // round; the oracle unrolls the full budget, safe because a
-    // zero-change round is a fixed point of the synchronous update
-    "graph_lpa_converged" -> ((s, dir) => {
-      val li = Relational.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      val edges = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("src"), col("b.p").as("dst"))
-      gate(Graph.labelPropagationConverged(edges, GraphMaxRounds,
-        pin = _.localCheckpoint()).labels, "node")
-    }),
+    // .labelPropagationConverged) — the stop is measured per round;
+    // the oracle unrolls the full budget, safe because a zero-change
+    // round is a fixed point of the synchronous update
+    "graph_lpa_converged" -> ((s, dir) =>
+      gate(Graph.labelPropagationConverged(coOrderedPartEdges(s, dir),
+        GraphMaxRounds).labels, "node")),
     // ext: PageRank over the symmetrized customer↔supplier order graph
     // (prefixed string ids keep the two key spaces disjoint); fixed
     // 5-round power iteration, rank snapped only at the gate
     "graph_pagerank" -> ((s, dir) => {
-      val ord = Relational.orders(s, dir).select("o_orderkey", "o_custkey")
-      val li = Relational.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-      val e0 = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .agg(count(lit(1)).as("weight"))
+      val e0 = orderGraph(s, dir, weighted = true)
       val edges = e0.unionByName(
         e0.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-      gate(Graph.pageRank(edges, PrIters, PrDamping,
-        pin = _.localCheckpoint()), "node")
+      gate(Graph.pageRank(edges, PrIters, PrDamping), "node")
     }),
     // ext: PageRank over the DIRECTED customer→supplier graph — every
     // supplier is a genuine sink, so this exercises the dangling-mass
     // redistribution (Σrank stays exactly 1; spec-pinned). Same 5-round
     // power iteration, one extra 1-row scalar broadcast per round.
-    "graph_pagerank_dangling" -> ((s, dir) => {
-      val ord = Relational.orders(s, dir).select("o_orderkey", "o_custkey")
-      val li = Relational.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-      val edges = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .agg(count(lit(1)).as("weight"))
-      gate(Graph.pageRankDangling(edges, PrIters, PrDamping,
-        pin = _.localCheckpoint()), "node")
-    }),
+    "graph_pagerank_dangling" -> ((s, dir) =>
+      gate(Graph.pageRankDangling(orderGraph(s, dir, weighted = true),
+        PrIters, PrDamping), "node")),
     // ext: personalized PageRank from a trusted seed set (every 100th
     // customer) over the DIRECTED graph — teleport AND dangling mass
     // return to the seeds, so rank decays with distance from them
     "graph_ppr" -> ((s, dir) => {
-      val ord = Relational.orders(s, dir).select("o_orderkey", "o_custkey")
-      val li = Relational.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-      val edges = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .agg(count(lit(1)).as("weight"))
-      val seeds = ord.select(col("o_custkey")).distinct()
+      val edges = orderGraph(s, dir, weighted = true)
+      val seeds = Relational.orders(s, dir).select(col("o_custkey")).distinct()
         .where(pmod(col("o_custkey"), lit(PprSeedMod)) === 0)
         .select(concat(lit("c"), col("o_custkey")).as("node"))
-      gate(Graph.personalizedPageRank(edges, seeds, PrIters, PrDamping,
-        pin = _.localCheckpoint()), "node")
+      gate(Graph.personalizedPageRank(edges, seeds, PrIters, PrDamping), "node")
     }),
     // ext: HITS hubs/authorities over the DIRECTED customer→supplier
     // graph (customers are pure hubs, suppliers pure authorities —
     // the bipartite case where HITS and PageRank genuinely differ);
     // L1-normalized per half-round so each table sums to exactly 1
-    "graph_hits" -> ((s, dir) => {
-      val ord = Relational.orders(s, dir).select("o_orderkey", "o_custkey")
-      val li = Relational.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-      val edges = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-      gate(Graph.hits(edges, HitsIters, pin = _.localCheckpoint()), "node")
-    }),
+    "graph_hits" -> ((s, dir) =>
+      gate(Graph.hits(orderGraph(s, dir, weighted = false), HitsIters), "node")),
     // ext: resource-allocation link prediction on the co-ordered-parts
     // graph — non-edge pairs scored Σ 1/deg(w) over shared neighbors
     // (division-only, so the score replays exactly in any engine);
     // hub through-nodes capped at LinkMaxDeg (the df-cap analogue,
     // principled here: dropped hubs carry ≤ 1/maxDeg signal per pair)
-    "graph_linkpred" -> ((s, dir) => {
-      val li = Relational.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      val edges = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("src"), col("b.p").as("dst"))
-      gate(Graph.linkPredict(edges, LinkMinCommon, LinkMaxDeg), "u", "v")
-    })
+    "graph_linkpred" -> ((s, dir) =>
+      gate(Graph.linkPredict(coOrderedPartEdges(s, dir), LinkMinCommon, LinkMaxDeg), "u", "v"))
   )
 
   /** PageRank contract: rounds and damping factor. */
@@ -532,7 +464,7 @@ object RelationalEntries {
     * pure-function convention). */
   private val LpaRounds = 3
 
-  /** Triangle-router contract (r13): the organic co-ordered-parts graph
+  /** Triangle-router contract: the organic co-ordered-parts graph
     * holds a scale-CONSTANT wedges/edge ratio (measured 26.3 / 33.4 /
     * 34.4 at sf0.001/0.01/0.1), so 128 wedges/edge routes `exact` at
     * every scale with ~4× margin, while 4/edge forces the sampled
@@ -553,6 +485,20 @@ object RelationalEntries {
   /** Fixed color count of the measured sampled kernel (wedge shuffle
     * ÷ n² = 16 vs the exact kernel on the same graph). */
   private val TriColors = 4
+
+  /** The customer→supplier order graph the ranking contract rows share:
+    * one (src, dst) row per line item, customer and supplier ids
+    * prefixed ("c", "s") so the two key spaces stay disjoint; `weighted`
+    * collapses it to one row per pair with the line count as `weight`. */
+  private def orderGraph(s: SparkSession, dir: String, weighted: Boolean): DataFrame = {
+    val ord = Relational.orders(s, dir).select("o_orderkey", "o_custkey")
+    val li = Relational.lineitem(s, dir).select("l_orderkey", "l_suppkey")
+    val lines = li.join(ord, col("l_orderkey") === col("o_orderkey"))
+    val ends = Seq(concat(lit("c"), col("o_custkey")).as("src"),
+      concat(lit("s"), col("l_suppkey")).as("dst"))
+    if (weighted) lines.groupBy(ends: _*).agg(count(lit(1)).as("weight"))
+    else lines.select(ends: _*)
+  }
 
   /** The co-ordered-parts undirected graph every graph_* contract row
     * shares: parts are adjacent iff some order contains both. */

@@ -1,6 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.PairSurface
@@ -11,8 +14,162 @@ import graft.core.PairSurface
  * quality weights the way [[Dedup.dupGroups]] feeds identity), expressed
  * as the standard Spark shape: one equi-join + one aggregate per
  * iteration, lineage truncated per round.
+ *
+ * Every iterative function runs on ONE round loop ([[iterate]], the
+ * Pregel superstep of Malewicz et al. 2010): the algorithm supplies a
+ * step (join the edges to the node state, aggregate by destination,
+ * update the state) and, where it stops on a measured rule, a per-round
+ * statistic. The loop pins each round's state with one eager
+ * `localCheckpoint` — lineage stays one round deep, and the statistic
+ * is read by `Dataset.observe` inside that same action, so a round
+ * costs one Spark action whether or not it is measured. Setup tables
+ * (the edges every round reads, PageRank's node table) are pinned
+ * inside the functions the same way; callers pass no pin.
+ *
+ * Null policy: an edge with a null endpoint is dropped, by every
+ * function. The undirected family drops it in [[canonicalUndirected]]
+ * (`least`/`greatest` skip nulls, so the edge becomes a self-loop, and
+ * self-loops are dropped); the directed family ([[pageRank]] and its
+ * variants, [[hits]]) filters it in [[directed]].
  */
 object Graph {
+
+  /** One round's observed statistic, by metric name. */
+  private type Stat = Map[String, Any]
+
+  /** A finished [[iterate]] run: the last state, one [[Stat]] per round
+    * run (empty when no statistic was asked for), and whether the stop
+    * rule ended the run before the round budget did. */
+  private final case class Run(state: DataFrame, stats: Seq[Stat], stopped: Boolean)
+
+  /** Pins `df` with one eager `localCheckpoint`, reading `metrics` over
+    * its rows through a fresh [[Observation]] in that same action. */
+  private def pinObserved(df: DataFrame, metrics: Seq[Column]): (DataFrame, Stat) = {
+    val obs = Observation()
+    val pinned = df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint()
+    (pinned, obs.get)
+  }
+
+  /**
+   * The round loop: up to `maxRounds` times, `step` maps the state to
+   * the next one, which is pinned by one eager `localCheckpoint`. With a
+   * `stat`, the same action observes it over the new state's rows, and
+   * `stop(current, previous)` may end the run early.
+   */
+  private def iterate(init: DataFrame, maxRounds: Int, stat: Seq[Column] = Nil,
+      stop: (Stat, Option[Stat]) => Boolean = (_, _) => false)
+      (step: DataFrame => DataFrame): Run = {
+    var state = init
+    val stats = ArrayBuffer.empty[Stat]
+    var stopped = false
+    var round = 0
+    while (round < maxRounds && !stopped) {
+      if (stat.isEmpty) state = step(state).localCheckpoint()
+      else {
+        val (next, s) = pinObserved(step(state), stat)
+        stopped = stop(s, stats.lastOption)
+        stats += s
+        state = next
+      }
+      round += 1
+    }
+    Run(state, stats.toSeq, stopped)
+  }
+
+  /** The directed family's edge rows: null endpoints dropped. */
+  private def directed(edges: DataFrame): DataFrame =
+    edges.where(col("src").isNotNull && col("dst").isNotNull)
+
+  /** [[runRank]]'s pinned graph: the edge table (src, dst, w), the node
+    * table (node, wout, dangling, in_s), and the node, sink and
+    * in-graph seed counts read while pinning it. */
+  private final case class RankGraph(edges: DataFrame, nodes: DataFrame,
+      n: Long, nDangling: Long, nSeeds: Long)
+
+  /**
+   * The one PageRank setup, two Spark actions: the edge projection is
+   * pinned first, because the node aggregate and every round read it (a
+   * caller's edge table is typically itself a join + aggregate); then one
+   * aggregate over it pins the node table — nodes are `src ∪ dst`, `wout`
+   * is a node's total out-weight, and a node is dangling iff it is never
+   * a `src` — observing the counts in the same action.
+   */
+  private def rankGraph(edges: DataFrame, seeds: Option[DataFrame]): RankGraph = {
+    val e = directed(edges)
+      .select(col("src"), col("dst"), col("weight").cast("long").as("w"))
+      .localCheckpoint()
+    val ends = e.select(col("src").as("node"), col("w"), lit(false).as("dangling"))
+      .union(e.select(col("dst").as("node"), lit(null).cast("long").as("w"),
+        lit(true).as("dangling")))
+      .groupBy("node").agg(sum("w").as("wout"), min("dangling").as("dangling"))
+    val (nodes, c) = pinObserved(seeds match {
+        case None => ends.withColumn("in_s", lit(null).cast("long"))
+        case Some(sd) => ends.join(sd.select(col("node")).distinct()
+          .withColumn("in_s", lit(1L)), Seq("node"), "left")
+      },
+      Seq(count(lit(1)).as("n_nodes"), count(when(col("dangling"), 1)).as("n_dangling"),
+        count(col("in_s")).as("n_seeds")))
+    RankGraph(e, nodes, c("n_nodes").asInstanceOf[Long],
+      c("n_dangling").asInstanceOf[Long], c("n_seeds").asInstanceOf[Long])
+  }
+
+  /**
+   * The power iteration behind [[pageRank]], [[pageRankDangling]],
+   * [[pageRankConverged]] and [[personalizedPageRank]]:
+   *
+   *   rank_{t+1}(v) = tele(v) + d · (Σ_{u→v} rank_t(u)·p(u,v) + D_t·share(v))
+   *
+   * with D_t the rank mass on sinks; tele = (1 − d)/N and share = 1/N for
+   * the uniform walk, tele = (1 − d)·e(v) and share = e(v) for the
+   * personalized one. Without sinks the D_t term is left out of the plan
+   * (the sink count is already read), so [[pageRank]]'s round has no
+   * cross join. The state carries the previous rank, so `tol` reads the
+   * L1 movement in the round's own action.
+   */
+  private def runRank(edges: DataFrame, seeds: Option[DataFrame], iters: Int,
+      damping: Double, tol: Option[Double], sinksAllowed: Boolean): RankResult = {
+    require(damping >= 0 && damping <= 1, "damping must be in [0, 1]")
+    val g = rankGraph(edges, seeds)
+    require(sinksAllowed || g.nDangling == 0,
+      s"${g.nDangling} dst-only node(s) would silently lose incoming rank mass" +
+        " — symmetrize the edges or use pageRankDangling")
+    require(g.n > 0, "graph has no nodes")
+    val (init, carried, tele, share) = seeds match {
+      case None =>
+        (g.nodes.select(col("node"), col("wout"), col("dangling"),
+          (lit(1.0) / g.n).as("rank")),
+          Seq(col("node"), col("wout"), col("dangling")),
+          lit((1.0 - damping) / g.n), (dm: Column) => dm / g.n)
+      case Some(_) =>
+        require(g.nSeeds > 0, "seeds: no seed is a node of the graph")
+        val e = (coalesce(col("in_s"), lit(0L)).cast("double") / g.nSeeds).as("e")
+        (g.nodes.select(col("node"), col("wout"), col("dangling"), e, e.as("rank")),
+          Seq(col("node"), col("wout"), col("dangling"), col("e")),
+          (lit(1.0) - lit(damping)) * col("e"), (dm: Column) => dm * col("e"))
+    }
+    def step(ranks: DataFrame): DataFrame = {
+      val prob = col("w").cast("double") / col("wout").cast("double")
+      val contrib = g.edges.join(ranks, col("src") === col("node"))
+        .groupBy(col("dst")).agg(sum(prob * col("rank")).as("c"))
+      val c = coalesce(col("c"), lit(0.0))
+      val joined = ranks.join(contrib, col("node") === col("dst"), "left")
+      val (next, inflow) =
+        if (g.nDangling == 0) (joined, c)
+        else (joined.crossJoin(ranks.where(col("dangling"))
+          .agg(coalesce(sum("rank"), lit(0.0)).as("dmass"))),
+          c + share(col("dmass")))
+      next.select(carried :+ (tele + lit(damping) * inflow).as("rank") :+
+        col("rank").as("prev"): _*)
+    }
+    val run = tol match {
+      case None => iterate(init, iters)(step)
+      case Some(t) => iterate(init, iters,
+        Seq(sum(abs(col("rank") - col("prev"))).as("l1")),
+        (s, _) => s("l1").asInstanceOf[Double] < t)(step)
+    }
+    RankResult(run.state.select("node", "rank"),
+      run.stats.map(_("l1").asInstanceOf[Double]))
+  }
 
   /**
    * PageRank by power iteration (Page et al. 1999) over a weighted edge
@@ -25,61 +182,27 @@ object Graph {
    * dangling nodes, whose leaked mass would otherwise need the
    * redistribute-to-all correction; use [[pageRankDangling]] for graphs
    * with genuine sinks). The precondition is ENFORCED: a dst-only node
-   * would silently lose the mass flowing into it at the nodes-left-join,
-   * so the one cheap validation count (node-sized anti-join) fails fast
-   * instead. Fixed `iters` rounds: rank is a diagnostic weight here, not
-   * a fixpoint contract — 5 rounds separate hubs from leaves at any
-   * scale, and a fixed round count keeps the result a pure function of
-   * the input (no convergence race).
+   * would silently lose the mass flowing into it, so the sink count read
+   * while the graph is pinned fails the call instead. Fixed `iters`
+   * rounds: rank is a diagnostic weight here, not a fixpoint contract —
+   * 5 rounds separate hubs from leaves at any scale, and a fixed round
+   * count keeps the result a pure function of the input (no convergence
+   * race).
    *
    * Determinism: transition probabilities are one exact IEEE division of
    * int64 weights per edge; per-iteration sums carry ~1e-16 of engine
    * sum-order noise, far inside the harness's 1e-6 snap even compounded
    * over the rounds.
    *
-   * Scale shape: the probability table is edge-sized and reused every
-   * round ([[pin]] it); each round is ONE src-keyed equi-join (rank is
-   * node-sized, edges dominate) + ONE dst-keyed aggregate with map-side
-   * partials — the canonical distributed PageRank; `localCheckpoint`
-   * truncates the growing lineage each round (the [[Dedup.dupGroups]]
-   * convention). The single driver action is the node COUNT (one long —
-   * the k-means convergence-count precedent), which becomes the plan
-   * constant (1−d)/N.
+   * Scale shape: two setup actions pin the edge projection and the node
+   * table (reading N and the sink count); then each round is ONE
+   * src-keyed equi-join (rank is node-sized, edges dominate) + ONE
+   * dst-keyed aggregate with map-side partials — the canonical
+   * distributed PageRank — pinned by the round's one checkpoint.
    */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      pin: DataFrame => DataFrame = identity): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    require(damping >= 0 && damping <= 1, "damping must be in [0, 1]")
-    // pin the edge projection itself (r13): it feeds FOUR separate
-    // actions (the out-weight aggregate, the probability pin, the node
-    // pin, the dst-only validation count) and the caller's edge table is
-    // typically itself a join (the co-ordered-parts self-join) — without
-    // the pin each action re-executes that build (measured: 3 rebuilds
-    // of the pair join per call at sf0.1)
-    val e = pin(edges.select(col("src"), col("dst"), col("weight").cast("long").as("w")))
-    val ow = e.groupBy("src").agg(sum("w").as("wout"))
-    val p = pin(e.join(ow, "src")
-      .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("wout").cast("double")).as("prob")))
-    val nodes = pin(e.select(col("src").as("node")).distinct())
-    val nDstOnly = e.select(col("dst").as("node")).distinct()
-      .join(nodes, Seq("node"), "left_anti").count()
-    require(nDstOnly == 0,
-      s"$nDstOnly dst-only node(s) would silently lose incoming rank mass" +
-        " — symmetrize the edges or use pageRankDangling")
-    val n = nodes.count()
-    require(n > 0, "graph has no nodes")
-    val base = lit((1.0 - damping) / n)
-    var ranks = nodes.select(col("node"), (lit(1.0) / n).as("rank"))
-    for (_ <- 0 until iters) {
-      val contrib = p.join(ranks, col("src") === col("node"))
-        .groupBy(col("dst")).agg(sum(col("prob") * col("rank")).as("c"))
-      ranks = nodes.join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (base + lit(damping) * coalesce(col("c"), lit(0.0))).as("rank"))
-        .localCheckpoint()
-    }
-    ranks
+    runRank(edges, None, iters, damping, tol = None, sinksAllowed = false).ranks
   }
 
   /**
@@ -125,14 +248,22 @@ object Graph {
       .where(col("u") =!= col("v"))
       .distinct()
 
+  /** The distinct endpoints of a canonical edge set. */
+  private def nodesOf(und: DataFrame): DataFrame =
+    und.select(col("u").as("node")).union(und.select(col("v").as("node"))).distinct()
+
+  /** Per-node degree of a canonical edge set — shared by
+    * [[orientByDegree]], [[degreeStats]] and the k-core round. */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(col("u").as("node")).union(und.select(col("v").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("deg"))
+
   /** The (degree, id)-acyclic orientation of a canonical edge set —
     * every edge pointed from its (deg, id)-smaller endpoint `a` to the
     * larger `b`, bounding each out-degree by O(√m) (see
     * [[triangleCounts]]'s scaladoc for why that defuses hubs). */
   private def orientByDegree(und: DataFrame): DataFrame = {
-    val deg = und.select(col("u").as("node"))
-      .union(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
+    val deg = degrees(und)
     und
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
@@ -221,9 +352,7 @@ object Graph {
   def triangleRoute(edges: DataFrame, budgetPerEdge: Long): DataFrame = {
     require(budgetPerEdge > 0, "budgetPerEdge must be positive")
     val und = canonicalUndirected(edges)
-    val nodes = und.select(col("u").as("node"))
-      .union(und.select(col("v").as("node"))).distinct()
-      .agg(count(lit(1)).as("n_nodes"))
+    val nodes = nodesOf(und).agg(count(lit(1)).as("n_nodes"))
     val surface = PairSurface.probe(orientByDegree(und), Nil, "a")
       .select(col("postings").as("n_edges"), col("uncapped_pairs").as("wedges"))
     nodes.crossJoin(surface)
@@ -328,14 +457,8 @@ object Graph {
    * 1-row result.
    */
   def degreeStats(edges: DataFrame): DataFrame = {
-    val und = edges.select(
-        least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-    val deg = und.select(col("u").as("node"))
-      .union(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
+    val und = canonicalUndirected(edges)
+    val deg = degrees(und)
     val nodeStats = deg.agg(
       count(lit(1)).as("n_nodes"),
       min("deg").as("min_degree"),
@@ -363,6 +486,23 @@ object Graph {
         col("max_degree"), col("mean_degree"), col("assortativity"))
   }
 
+  /** One k-core peel round, shared by [[kCoreAlive]] and
+    * [[kCoreFixpoint]]: the degree of every node in the subgraph induced
+    * by the previous round's survivors (`deg ≥ k`). */
+  private def kCoreStep(und: DataFrame, k: Int)(deg: DataFrame): DataFrame = {
+    val alive = deg.where(col("deg") >= k).select("node")
+    degrees(und
+      .join(alive.select(col("node").as("u")), Seq("u"), "left_semi")
+      .join(alive.select(col("node").as("v")), Seq("v"), "left_semi"))
+  }
+
+  /** The pinned canonical edges of a k-core peel and its round-0 state:
+    * every node alive, through a placeholder degree of `k`. */
+  private def kCoreStart(edges: DataFrame, k: Int): (DataFrame, DataFrame) = {
+    val und = canonicalUndirected(edges).localCheckpoint()
+    (und, nodesOf(und).select(col("node"), lit(k.toLong).as("deg")))
+  }
+
   /**
    * Fixed-round k-core peeling (Seidman 1983 coreness, the Batagelj–
    * Zaveršnik cascade run a bounded number of rounds): start from all
@@ -376,36 +516,18 @@ object Graph {
    * round only ever removes, so round r is a sound over-approximation
    * of the core from above.
    *
-   * Scale shape: per round, two node-sized semi-joins restrict the edge
-   * table to surviving endpoints and ONE map-side-partial aggregate
-   * recomputes degrees — no edge explosion, no inequality join;
-   * `localCheckpoint` truncates lineage per round. Peeling is monotone,
-   * so the survivor set (the join's build side) only shrinks round over
-   * round.
+   * Scale shape: one setup action pins the canonical edges; each round
+   * is two node-sized semi-joins restricting the edge table to
+   * surviving endpoints and ONE map-side-partial degree aggregate, pinned
+   * by the round's checkpoint — no edge explosion, no inequality join.
+   * Peeling is monotone, so the survivor set (the join's build side)
+   * only shrinks round over round.
    */
-  def kCoreAlive(edges: DataFrame, k: Int, rounds: Int,
-      pin: DataFrame => DataFrame = identity): DataFrame = {
+  def kCoreAlive(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, "k must be at least 1")
     require(rounds >= 1, "rounds must be at least 1")
-    val und = pin(edges.select(
-        least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct())
-    var alive = und.select(col("u").as("node"))
-      .union(und.select(col("v").as("node"))).distinct()
-    var deg: DataFrame = null
-    for (_ <- 0 until rounds) {
-      val induced = und
-        .join(alive.select(col("node").as("u")), Seq("u"), "left_semi")
-        .join(alive.select(col("node").as("v")), Seq("v"), "left_semi")
-      deg = induced.select(col("u").as("node"))
-        .unionByName(induced.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      alive = deg.where(col("deg") >= k).select("node")
-    }
-    deg.where(col("deg") >= k)
+    val (und, start) = kCoreStart(edges, k)
+    iterate(start, rounds)(kCoreStep(und, k)).state.where(col("deg") >= k)
   }
 
   /** [[kCoreFixpoint]]'s readout: the surviving induced-degree table,
@@ -418,14 +540,16 @@ object Graph {
    * [[kCoreAlive]] driven to its FIXED POINT — the true k-core (the
    * maximal induced subgraph of minimum degree ≥ k), stopping after the
    * first round whose survivor count stops shrinking instead of running
-   * a blind fixed round count (VERDICT r8 ask #5; the
-   * [[pageRankConverged]] measured-stopping-rule pattern). The survivor
-   * set is monotone decreasing (a round's degrees are computed over the
-   * previous survivors only), so an unchanged COUNT implies an unchanged
-   * SET implies the fixed point — one cheap long per round decides, and
-   * the per-round counts come back in [[CoreResult.aliveCounts]] (the
+   * a blind fixed round count (the [[pageRankConverged]]
+   * measured-stopping-rule pattern). The survivor set is monotone
+   * decreasing (a round's degrees are computed over the previous
+   * survivors only), so an unchanged COUNT implies an unchanged SET
+   * implies the fixed point — one cheap long per round decides, and the
+   * per-round counts come back in [[CoreResult.aliveCounts]] (the
    * RankResult.l1Deltas convention) so the peel depth is measured, not
-   * guessed.
+   * guessed. Round 1's survivor count is compared with round 1's row
+   * count: every node of the canonical edge set has degree ≥ 1 there,
+   * so that row count is the starting node count.
    *
    * Convergence is also ORACLE-SAFE under a fixed unroll: once the set
    * stops changing, further peel rounds are identity — an oracle that
@@ -433,42 +557,48 @@ object Graph {
    * the fixed point is reached within the budget, and equals the
    * maxRounds-th round otherwise (both sides agree either way).
    *
-   * Scale shape: [[kCoreAlive]]'s exact per-round plan (two survivor
-   * semi-joins + one degree aggregate, lineage truncated) plus one
-   * node-set-sized COUNT per round — the price of a measured stop.
+   * Scale shape: [[kCoreAlive]]'s exact per-round plan; the survivor
+   * count is observed inside the round's own checkpoint, so the
+   * measured stop costs no extra action.
    */
-  def kCoreFixpoint(edges: DataFrame, k: Int, maxRounds: Int = 30,
-      pin: DataFrame => DataFrame = identity): CoreResult = {
+  def kCoreFixpoint(edges: DataFrame, k: Int, maxRounds: Int = 30): CoreResult = {
     require(k >= 1, "k must be at least 1")
     require(maxRounds >= 1, "maxRounds must be at least 1")
-    val und = pin(edges.select(
-        least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct())
-    var alive = und.select(col("u").as("node"))
-      .union(und.select(col("v").as("node"))).distinct()
-    var prev = alive.count()
-    var deg: DataFrame = null
-    val counts = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var converged = false
-    var round = 0
-    while (round < maxRounds && !converged) {
-      val induced = und
-        .join(alive.select(col("node").as("u")), Seq("u"), "left_semi")
-        .join(alive.select(col("node").as("v")), Seq("v"), "left_semi")
-      deg = induced.select(col("u").as("node"))
-        .unionByName(induced.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      alive = deg.where(col("deg") >= k).select("node")
-      val n = alive.count()
-      counts += n
-      converged = n == prev
-      prev = n
-      round += 1
-    }
-    CoreResult(deg.where(col("deg") >= k), counts.toSeq, converged)
+    val (und, start) = kCoreStart(edges, k)
+    def alive(s: Stat) = s("alive").asInstanceOf[Long]
+    val run = iterate(start, maxRounds,
+      Seq(count(lit(1)).as("nodes"), count(when(col("deg") >= k, 1)).as("alive")),
+      (s, prev) => alive(s) == prev.fold(s("nodes").asInstanceOf[Long])(alive))(
+      kCoreStep(und, k))
+    CoreResult(run.state.where(col("deg") >= k), run.stats.map(alive), run.stopped)
+  }
+
+  /** The pinned LPA edge table — both directions of every canonical
+    * edge plus one self-loop per node (the node's vote for its own
+    * label) — and the round-0 labels, every node its own. The canonical
+    * edges are pinned first: the table reads them three times, and
+    * unpinned each read re-runs their distinct aggregate. */
+  private def lpaStart(edges: DataFrame): (DataFrame, DataFrame) = {
+    val canon = canonicalUndirected(edges).localCheckpoint()
+    val und = canon
+      .union(canon.select(col("v").as("u"), col("u").as("v")))
+      .union(nodesOf(canon).select(col("node").as("u"), col("node").as("v")))
+      .localCheckpoint()
+    (und, und.where(col("u") === col("v"))
+      .select(col("u").as("node"), col("u").as("label")))
+  }
+
+  /** One synchronous LPA round, shared by [[labelPropagation]] and
+    * [[labelPropagationConverged]]: every node adopts the plurality label
+    * among its votes, ties to the smallest label. */
+  private def lpaStep(und: DataFrame)(lbl: DataFrame): DataFrame = {
+    val w = Window.partitionBy("u").orderBy(col("c").desc, col("nl").asc)
+    und
+      .join(lbl.select(col("node").as("v"), col("label").as("nl")), "v")
+      .groupBy(col("u"), col("nl")).agg(count(lit(1)).as("c"))
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") === 1)
+      .select(col("u").as("node"), col("nl").as("label"))
   }
 
   /**
@@ -484,46 +614,17 @@ object Graph {
    * curation question ("which parts cluster") rather than the dedup
    * question ("which parts touch").
    *
-   * Scale shape: per round ONE edge-sized equi-join on the neighbor
-   * endpoint, one (node, label) count aggregate (map-side partial), and
-   * one per-node argmax window whose partitions are degree-bounded —
-   * never node-count-bounded. Fixed rounds keep it lazy and
-   * oracle-checkable; `pin` the edge table (the [[kCoreAlive]]
-   * convention) since the unrolled plan references it every round.
+   * Scale shape: two setup actions pin the canonical and the two-way
+   * edge tables; each round is ONE edge-sized equi-join on the
+   * neighbor endpoint, one (node, label) count aggregate (map-side
+   * partial), and one per-node argmax window whose partitions are
+   * degree-bounded — never node-count-bounded — pinned by the round's
+   * checkpoint.
    */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-      pin: DataFrame => DataFrame = identity): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be at least 1")
-    // canon NOT pinned here (r13, measured both ways): pinning it saved
-    // 2.4 s at sf0.1 (the und pin re-derives the caller's edge build 3×)
-    // but regressed the kernel 4.3× at the 10× replica (16.5 → 71.1 s) —
-    // the un-checkpointed lazy round chain below plans against canon's
-    // statistics, and a stats-less LogicalRDD under 8 unrolled rounds
-    // degrades with scale. [[labelPropagationConverged]] DOES pin canon:
-    // its per-round checkpoint makes every round's plan shallow, and its
-    // sfx1 draw was flat (33.4 → 33.0 s) with the pin in place.
-    val canon = edges.select(
-        least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-    val nodes = canon.select(col("u").as("node"))
-      .union(canon.select(col("v").as("node"))).distinct()
-    val und = pin(canon
-      .union(canon.select(col("v").as("u"), col("u").as("v")))
-      .union(nodes.select(col("node").as("u"), col("node").as("v"))))
-    var lbl = nodes.select(col("node"), col("node").as("label"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("u").orderBy(col("c").desc, col("nl").asc)
-    for (_ <- 1 to rounds) {
-      lbl = und
-        .join(lbl.select(col("node").as("v"), col("label").as("nl")), "v")
-        .groupBy(col("u"), col("nl")).agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("u").as("node"), col("nl").as("label"))
-    }
-    lbl
+    val (und, start) = lpaStart(edges)
+    iterate(start, rounds)(lpaStep(und)).state
   }
 
   /** [[labelPropagationConverged]]'s readout: the final label table,
@@ -535,60 +636,32 @@ object Graph {
   /**
    * [[labelPropagation]] driven to convergence: stops after the first
    * round in which NO node changed label (or at `maxRounds`), returning
-   * the measured per-round change counts (VERDICT r8 ask #5 — the
-   * [[pageRankConverged]] / [[kCoreFixpoint]] stopping-rule pattern).
-   * Each synchronous round is a pure function of the previous label
-   * table, so a zero-change round is a genuine fixed point: every
-   * subsequent round reproduces it exactly. That also makes the early
-   * stop ORACLE-SAFE under a fixed unroll — rounds past convergence are
-   * identity, so an oracle unrolling `maxRounds` rounds matches whether
-   * or not the graph converged inside the budget. (Synchronous LPA can
-   * 2-cycle on bipartite-ish structure even with the self-loop vote —
-   * then `converged` comes back false and the result is the
-   * maxRounds-th table, again matching the unrolled oracle.)
+   * the measured per-round change counts (the [[pageRankConverged]] /
+   * [[kCoreFixpoint]] stopping-rule pattern). Each synchronous round is
+   * a pure function of the previous label table, so a zero-change round
+   * is a genuine fixed point: every subsequent round reproduces it
+   * exactly. That also makes the early stop ORACLE-SAFE under a fixed
+   * unroll — rounds past convergence are identity, so an oracle
+   * unrolling `maxRounds` rounds matches whether or not the graph
+   * converged inside the budget. (Synchronous LPA can 2-cycle on
+   * bipartite-ish structure even with the self-loop vote — then
+   * `converged` comes back false and the result is the maxRounds-th
+   * table, again matching the unrolled oracle.)
    *
-   * Scale shape: [[labelPropagation]]'s per-round plan (one edge-sized
-   * equi-join, one (node, label) count aggregate, one degree-bounded
-   * argmax window) plus one node-sized change-count join per round —
-   * lineage truncated per round, one long to the driver.
+   * Scale shape: [[labelPropagation]]'s per-round plan plus one
+   * node-sized join against the previous labels; the change count is
+   * observed inside the round's own checkpoint.
    */
-  def labelPropagationConverged(edges: DataFrame, maxRounds: Int = 20,
-      pin: DataFrame => DataFrame = identity): LpaResult = {
+  def labelPropagationConverged(edges: DataFrame, maxRounds: Int = 20): LpaResult = {
     require(maxRounds >= 1, "maxRounds must be at least 1")
-    // canon pinned (r13) — see [[labelPropagation]]
-    val canon = pin(edges.select(
-        least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct())
-    val nodes = canon.select(col("u").as("node"))
-      .union(canon.select(col("v").as("node"))).distinct()
-    val und = pin(canon
-      .union(canon.select(col("v").as("u"), col("u").as("v")))
-      .union(nodes.select(col("node").as("u"), col("node").as("v"))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("u").orderBy(col("c").desc, col("nl").asc)
-    var lbl = nodes.select(col("node"), col("node").as("label")).localCheckpoint()
-    val changes = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var converged = false
-    var round = 0
-    while (round < maxRounds && !converged) {
-      val next = und
-        .join(lbl.select(col("node").as("v"), col("label").as("nl")), "v")
-        .groupBy(col("u"), col("nl")).agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("u").as("node"), col("nl").as("label"))
-        .localCheckpoint()
-      val moved = next
-        .join(lbl.withColumnRenamed("label", "prev"), "node")
-        .where(col("label") =!= col("prev")).count()
-      changes += moved
-      converged = moved == 0L
-      lbl = next
-      round += 1
+    val (und, start) = lpaStart(edges)
+    def moved(s: Stat) = s("moved").asInstanceOf[Long]
+    val run = iterate(start, maxRounds,
+      Seq(count(when(col("label") =!= col("prev"), 1)).as("moved")),
+      (s, _) => moved(s) == 0L) { lbl =>
+      lpaStep(und)(lbl).join(lbl.select(col("node"), col("label").as("prev")), "node")
     }
-    LpaResult(lbl, changes.toSeq, converged)
+    LpaResult(run.state.select("node", "label"), run.stats.map(moved), run.stopped)
   }
 
   /**
@@ -620,11 +693,7 @@ object Graph {
   def linkPredict(edges: DataFrame, minCommon: Int, maxDeg: Int): DataFrame = {
     require(minCommon >= 1, "minCommon must be at least 1")
     require(maxDeg >= 2, "a through-node needs degree >= 2 to form a wedge")
-    val und = edges.select(
-        least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
+    val und = canonicalUndirected(edges)
     val adj = und.select(col("u").as("w"), col("v").as("n"))
       .union(und.select(col("v").as("w"), col("u").as("n")))
     val deg = adj.groupBy("w").agg(count(lit(1)).as("deg"))
@@ -639,6 +708,20 @@ object Graph {
         sum(lit(1.0) / col("dw").cast("double")).as("ra"))
       .where(col("cn") >= minCommon)
       .join(und, Seq("u", "v"), "left_anti")
+  }
+
+  /** `base` (one row per node) with `raw`'s per-node sums `v` (keyed by
+    * `key`) L1-normalized into column `out`; nodes `raw` misses get 0.
+    * The normalizer is a 1-row sum consumed via a broadcast cross join —
+    * a sanctioned scalar broadcast, never a driver action. */
+  private def normalizedOnto(base: DataFrame, raw: DataFrame, key: String,
+      v: String, out: String): DataFrame = {
+    val total = raw.agg(coalesce(sum(col(v)), lit(0.0)).as("s"))
+    base.join(raw, col("node") === col(key), "left")
+      .crossJoin(broadcast(total))
+      .select(base.columns.map(col) :+
+        when(col("s") > 0, coalesce(col(v), lit(0.0)) / col("s"))
+          .otherwise(lit(0.0)).as(out): _*)
   }
 
   /**
@@ -656,50 +739,32 @@ object Graph {
    * Returns `(node, hub, auth)` for every node; pure sources carry
    * auth = 0 and pure sinks hub = 0 rather than dropping out. Duplicate
    * edges are collapsed first (classic HITS is over the 0/1 adjacency).
+   * Every hub starts at 1: round 1 normalizes it away, so no node count
+   * is needed, and an empty edge table returns an empty table.
    *
    * Determinism: per-round sums carry ~1e-15 of engine sum-order noise
    * and the normalizing division is correctly rounded — compounded over
    * the fixed rounds this stays far inside the harness's 1e-6 snap (the
    * [[pageRank]] argument).
    *
-   * Scale shape: per round TWO edge-sized equi-joins (one per direction)
-   * each feeding a map-side-partial aggregate, plus two 1-row
-   * normalization aggregates consumed via cross-join — sanctioned scalar
-   * broadcasts, never driver actions; `localCheckpoint` truncates
-   * lineage per half-round. The single driver action is the node COUNT
-   * (the [[pageRank]] convention) seeding hub₀ = 1/N.
+   * Scale shape: one setup action pins the distinct edges; each round
+   * is TWO edge-sized equi-joins (one per direction) each feeding
+   * a map-side-partial aggregate and a 1-row normalizer, pinned by the
+   * round's one checkpoint.
    */
-  def hits(edges: DataFrame, iters: Int,
-      pin: DataFrame => DataFrame = identity): DataFrame = {
+  def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be at least 1")
-    val e = pin(edges.select(col("src"), col("dst")).distinct())
-    val nodes = pin(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    val n = nodes.count()
-    require(n > 0, "graph has no nodes")
-    var hub = nodes.select(col("node"), (lit(1.0) / n).as("hub"))
-    var auth = nodes.select(col("node"), lit(0.0).as("auth"))
-    for (_ <- 1 to iters) {
-      val araw = e.join(hub, col("src") === col("node"))
-        .groupBy(col("dst")).agg(sum(col("hub")).as("a"))
-      val asum = araw.agg(coalesce(sum(col("a")), lit(0.0)).as("s"))
-      auth = nodes.join(araw, col("node") === col("dst"), "left")
-        .crossJoin(broadcast(asum))
-        .select(col("node"),
-          when(col("s") > 0, coalesce(col("a"), lit(0.0)) / col("s"))
-            .otherwise(lit(0.0)).as("auth"))
-        .localCheckpoint()
-      val hraw = e.join(auth, col("dst") === col("node"))
-        .groupBy(col("src")).agg(sum(col("auth")).as("h"))
-      val hsum = hraw.agg(coalesce(sum(col("h")), lit(0.0)).as("s"))
-      hub = nodes.join(hraw, col("node") === col("src"), "left")
-        .crossJoin(broadcast(hsum))
-        .select(col("node"),
-          when(col("s") > 0, coalesce(col("h"), lit(0.0)) / col("s"))
-            .otherwise(lit(0.0)).as("hub"))
-        .localCheckpoint()
-    }
-    hub.join(auth, "node")
+    val e = directed(edges).select(col("src"), col("dst")).distinct().localCheckpoint()
+    val start = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+      .distinct().select(col("node"), lit(1.0).as("hub"))
+    iterate(start, iters) { hub =>
+      val auth = normalizedOnto(hub.select("node"),
+        e.join(hub, col("src") === col("node"))
+          .groupBy(col("dst")).agg(sum(col("hub")).as("a")), "dst", "a", "auth")
+      normalizedOnto(auth,
+        e.join(auth, col("dst") === col("node"))
+          .groupBy(col("src")).agg(sum(col("auth")).as("h")), "src", "h", "hub")
+    }.state.select("node", "hub", "auth")
   }
 
   /** Final ranks plus the measured per-round L1 movement — the readout
@@ -719,27 +784,27 @@ object Graph {
    *
    * Scale shape: identical to [[pageRank]] (one edge-sized equi-join +
    * one map-side-partial aggregate per round) plus, per round, ONE 1-row
-   * dangling-mass aggregate consumed via cross-join — a sanctioned
-   * scalar broadcast, never a driver action. The dangling node set is a
-   * node-sized anti-join computed once and reused.
+   * dangling-mass aggregate over the state's sink rows consumed via cross
+   * join — a sanctioned scalar broadcast, never a driver action.
    */
-  def pageRankDangling(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      pin: DataFrame => DataFrame = identity): DataFrame =
-    runDangling(edges, iters, damping, pin, tol = None).ranks
+  def pageRankDangling(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
+    require(iters >= 0, "iters must be non-negative")
+    runRank(edges, None, iters, damping, tol = None, sinksAllowed = true).ranks
+  }
 
   /**
    * [[pageRankDangling]] driven to convergence: stops after the first
    * round whose L1 movement `Σ|rank_t − rank_{t−1}|` drops below `tol`
-   * (or at `maxIters`), returning the measured per-round deltas. Each
-   * round adds one node-sized join (vs the previous ranks) and one 1-row
-   * driver action for the delta — the price of a measured stopping rule;
-   * use [[pageRankDangling]] when a fixed round count is the contract.
+   * (or at `maxIters`), returning the measured per-round deltas. The
+   * state carries the previous rank, so the delta is observed inside the
+   * round's own checkpoint — a measured stop costs no extra action; use
+   * [[pageRankDangling]] when a fixed round count is the contract.
    */
   def pageRankConverged(edges: DataFrame, tol: Double, maxIters: Int = 20,
-      damping: Double = 0.85,
-      pin: DataFrame => DataFrame = identity): RankResult = {
+      damping: Double = 0.85): RankResult = {
     require(tol > 0, "tol must be positive")
-    runDangling(edges, maxIters, damping, pin, tol = Some(tol))
+    require(maxIters >= 1, "maxIters must be at least 1")
+    runRank(edges, None, maxIters, damping, tol = Some(tol), sinksAllowed = true)
   }
 
   /**
@@ -758,99 +823,16 @@ object Graph {
    * every round, same conservation contract as the dangling variant.
    *
    * Seeds outside the graph are ignored (the intersection seeds∩nodes
-   * must be non-empty — validated by the same count that sizes e).
+   * must be non-empty — validated by the seed count read while the
+   * node table is pinned).
    *
-   * Scale shape: [[pageRankDangling]]'s exact per-round plan (one
-   * edge-sized equi-join + one map-side-partial aggregate + one 1-row
-   * dangling scalar) over a node-sized teleport table computed ONCE
-   * (one semi-join-shaped left join); the one extra driver action is
-   * the model-sized seed COUNT.
+   * Scale shape: [[pageRankDangling]]'s exact per-round plan, with the
+   * teleport weight e carried in the node state; the seed flags join the
+   * node table as it is pinned.
    */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
-      damping: Double = 0.85,
-      pin: DataFrame => DataFrame = identity): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    require(damping >= 0 && damping <= 1, "damping must be in [0, 1]")
-    // pinned for the same reason as [[pageRank]]'s edge projection: five
-    // downstream actions would otherwise each rebuild the caller's edges
-    val e = pin(edges.select(col("src"), col("dst"), col("weight").cast("long").as("w")))
-    val ow = e.groupBy("src").agg(sum("w").as("wout"))
-    val p = pin(e.join(ow, "src")
-      .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("wout").cast("double")).as("prob")))
-    val nodes = pin(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    val dangling = pin(nodes.join(e.select(col("src").as("node")).distinct(),
-      Seq("node"), "left_anti"))
-    val sd = seeds.select(col("node")).distinct()
-      .join(nodes, Seq("node"), "left_semi")
-    val m = sd.count()
-    require(m > 0, "no seed is a node of the graph")
-    val tele = pin(nodes
-      .join(sd.withColumn("in_s", lit(1L)), Seq("node"), "left")
-      .select(col("node"),
-        (coalesce(col("in_s"), lit(0L)).cast("double") / m).as("e")))
-    var ranks = tele.select(col("node"), col("e").as("rank"))
-    for (_ <- 0 until iters) {
-      val dm = ranks.join(dangling, Seq("node"), "left_semi")
-        .agg(coalesce(sum("rank"), lit(0.0)).as("dmass"))
-      val contrib = p.join(ranks, col("src") === col("node"))
-        .groupBy(col("dst")).agg(sum(col("prob") * col("rank")).as("c"))
-      ranks = tele.join(contrib, col("node") === col("dst"), "left")
-        .crossJoin(dm)
-        .select(col("node"),
-          ((lit(1.0) - lit(damping)) * col("e") + lit(damping) *
-            (coalesce(col("c"), lit(0.0)) + col("dmass") * col("e"))).as("rank"))
-        .localCheckpoint()
-    }
-    ranks
-  }
-
-  private def runDangling(edges: DataFrame, iters: Int, damping: Double,
-      pin: DataFrame => DataFrame, tol: Option[Double]): RankResult = {
-    require(iters >= 0, "iters must be non-negative")
-    require(damping >= 0 && damping <= 1, "damping must be in [0, 1]")
-    // pinned for the same reason as [[pageRank]]'s edge projection: five
-    // downstream actions would otherwise each rebuild the caller's edges
-    val e = pin(edges.select(col("src"), col("dst"), col("weight").cast("long").as("w")))
-    val ow = e.groupBy("src").agg(sum("w").as("wout"))
-    val p = pin(e.join(ow, "src")
-      .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("wout").cast("double")).as("prob")))
-    val nodes = pin(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    val dangling = pin(nodes.join(e.select(col("src").as("node")).distinct(),
-      Seq("node"), "left_anti"))
-    val n = nodes.count()
-    require(n > 0, "graph has no nodes")
-    val base = lit((1.0 - damping) / n)
-    var ranks = nodes.select(col("node"), (lit(1.0) / n).as("rank"))
-    val deltas = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
-      // D_t: 1-row aggregate over the sink nodes' current rank,
-      // cross-joined into every row (scalar broadcast, stays in-plan)
-      val dm = ranks.join(dangling, Seq("node"), "left_semi")
-        .agg(coalesce(sum("rank"), lit(0.0)).as("dmass"))
-      val contrib = p.join(ranks, col("src") === col("node"))
-        .groupBy(col("dst")).agg(sum(col("prob") * col("rank")).as("c"))
-      val next = nodes.join(contrib, col("node") === col("dst"), "left")
-        .crossJoin(dm)
-        .select(col("node"),
-          (base + lit(damping) *
-            (coalesce(col("c"), lit(0.0)) + col("dmass") / n)).as("rank"))
-        .localCheckpoint()
-      tol.foreach { t =>
-        val moved = next.join(ranks.withColumnRenamed("rank", "prev"), "node")
-          .agg(sum(abs(col("rank") - col("prev"))).as("l1"))
-          .head().getDouble(0)
-        deltas += moved
-        converged = moved < t
-      }
-      ranks = next
-      round += 1
-    }
-    RankResult(ranks, deltas.toSeq)
+    runRank(edges, Some(seeds), iters, damping, tol = None, sinksAllowed = true).ranks
   }
 }

@@ -457,8 +457,8 @@ object TextAnalysis {
    * single exchange keyed by doc, partitions bounded by document
    * length, never a self-join on pos+1 — then a vocabulary²-bounded
    * (in practice edge-sparse) count aggregate, symmetrize + one more
-   * aggregate, and [[Graph.pageRank]]'s per-round edge-join/aggregate
-   * with `localCheckpoint` lineage truncation. Nothing driver-side.
+   * aggregate, and [[Graph.pageRank]]: two setup actions, then one
+   * checkpointed edge-join/aggregate per round.
    */
   def textRank(docs: DataFrame, idCol: String, textCol: String,
       iters: Int, damping: Double = 0.85, minLen: Int = 3,
@@ -475,7 +475,7 @@ object TextAnalysis {
     val edges = e0.unionByName(
         e0.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
       .groupBy("src", "dst").agg(sum(col("weight")).as("weight"))
-    Graph.pageRank(edges, iters, damping, pin = _.localCheckpoint())
+    Graph.pageRank(edges, iters, damping)
       .select(col("node").as("token"), col("rank"))
   }
 
@@ -700,7 +700,7 @@ object TextAnalysis {
    * [[featureHash]]). The tf frame feeds the LM counts AND the scoring
    * join; without `pin`, Catalyst's per-branch column pruning defeats
    * exchange reuse and the corpus is tokenized three times — pass
-   * `pin = _.localCheckpoint()` (the kCoreAlive convention) to
+   * `pin = _.localCheckpoint()` (the SparseAnn convention) to
    * materialize the token-aggregate-sized frame once.
    */
   def dsirWeights(docs: DataFrame, idCol: String, textCol: String,

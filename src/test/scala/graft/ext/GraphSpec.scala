@@ -1,6 +1,13 @@
 package graft.ext
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -64,11 +71,70 @@ class GraphSpec extends SparkSpec {
       0.85 * (1.0 / 3.0) * (3.0 / 4.0 - 1.0 / 4.0), 1e-12)
   }
 
+  /** Every SQL action `body` runs, in order, as (action, executed
+    * plan). Fence actions bracket the call, so actions left on the
+    * listener bus by earlier tests never count (the SparseAnnSpec
+    * action-budget pattern). */
+  private def actionsOf(body: => Unit): Seq[(String, String)] = {
+    val fenceCol = "graph_action_fence"
+    val fences = new AtomicInteger(0)
+    val actions = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == fenceCol)) fences.incrementAndGet()
+        else if (fences.get() == 1) actions.add(funcName -> qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        onSuccess(funcName, qe, 0L)
+    }
+    def fence(seen: Int): Unit = {
+      spark.range(1).toDF(fenceCol).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (fences.get() < seen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(fences.get() == seen, "fence action never observed")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      fence(1)
+      body
+      fence(2)
+      actions.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("each iteration plans an edge join + dst aggregate, no cartesian") {
-    val q = Graph.pageRank(star, 2)
-    val plan = q.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"), plan)
+    // the round plans themselves, read as they run (after the two setup
+    // pins): the returned frame is only a scan of the last checkpoint
+    val rounds = actionsOf(Graph.pageRank(star, 2)).drop(2)
+    assert(rounds.size == 2, rounds.map(_._1))
+    rounds.foreach { case (_, plan) =>
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoopJoin"), plan)
+      assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"), plan)
+      assert("HashAggregate\\(keys=\\[dst#".r.findFirstIn(plan).nonEmpty, plan)
+    }
+  }
+
+  test("action budget: setup pins, then one action per round") {
+    def actions(body: => Unit): Int = actionsOf(body).size
+    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
+    // PageRank pins its edges and its node table, LPA its canonical and
+    // its two-way edges; hits and the k-core pin one edge table
+    assert(actions(Graph.pageRank(star, 3)) == 2 + 3)
+    assert(actions(Graph.pageRankDangling(chain, 3)) == 2 + 3)
+    assert(actions(Graph.personalizedPageRank(chain, Seq("u").toDF("node"), 3)) == 2 + 3)
+    assert(actions(Graph.hits(g, 3)) == 1 + 3)
+    assert(actions(Graph.kCoreAlive(g, 2, 3)) == 1 + 3)
+    assert(actions(Graph.labelPropagation(g, 3)) == 2 + 3)
+    // the converged variants read their statistic inside the round's
+    // own action
+    var pr: Graph.RankResult = null
+    assert(actions { pr = Graph.pageRankConverged(chain, 1e-3, 50) } ==
+      2 + pr.l1Deltas.size)
+    var core: Graph.CoreResult = null
+    assert(actions { core = Graph.kCoreFixpoint(g, 2, 10) } == 1 + core.aliveCounts.size)
+    var lpa: Graph.LpaResult = null
+    assert(actions { lpa = Graph.labelPropagationConverged(g, 10) } ==
+      2 + lpa.changesPerRound.size)
   }
 
   test("labelPropagation splits bridged cliques into two communities") {

@@ -1,21 +1,27 @@
 #!/bin/bash
-# Paired A/B bench protocol (r13 finding: cross-day committed numbers
-# carry 1.2-8x host drift — judge optimizations ONLY on same-day paired
-# runs). Interleaves old/new fresh-JVM reps: old rep1, new rep1, old
-# rep2, ... Each rep is ONE JVM (SPARK_GRAFT_BENCH_REPS=1, the isolated
-# protocol) at the committed-artifact flags. Output: per-rep JSONs under
-# $OUTDIR plus a min-of-N per-query table on stdout.
+# Paired A/B bench protocol: numbers from different days carry 1.2-8x
+# host drift, so judge optimizations ONLY on same-day paired runs.
+# Interleaves old/new fresh-JVM reps: old rep1, new rep1, old rep2, ...
+# Each rep is ONE JVM (SPARK_GRAFT_BENCH_REPS=1, the isolated protocol)
+# at the committed-artifact flags. Both sides get the same heap: half of
+# this host's MemTotal, at least 2g. Output: per-rep JSONs under $OUTDIR
+# plus a min-of-N per-query table on stdout.
 #
-# Usage: OLD_CLASSES=/tmp/classes_old NEW_CLASSES=target/scala-2.13/classes \
+# Usage: OLD_CLASSES=/path/to/old/classes [NEW_CLASSES=target/scala-2.13/classes] \
 #        tools/ab_pair.sh OUTDIR REPS q1,q2,...
 # Pass ALL as the query list to bench every declared query (the
 # full-suite paired baseline).
 set -euo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 OUTDIR=$1; REPS=$2; QUERIES=$3
-OLD_CLASSES=${OLD_CLASSES:-/tmp/classes_r13_old}
-NEW_CLASSES=${NEW_CLASSES:-/root/repo/target/scala-2.13/classes}
+if [ -z "${OLD_CLASSES:-}" ]; then
+  echo "ab_pair.sh: set OLD_CLASSES to the compiled classes of the baseline" \
+    "(e.g. a git archive of the parent commit, built with sbt compile)" >&2
+  exit 2
+fi
+NEW_CLASSES=${NEW_CLASSES:-$PWD/target/scala-2.13/classes}
 SF_DIR=${SF_DIR:-/root/testdata/sf0.1}
+HEAP_GB=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g)}' /proc/meminfo)
 mkdir -p "$OUTDIR"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -23,7 +29,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-JFLAGS="$OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -XX:ReservedCodeCacheSize=2g -Xmx96g"
+JFLAGS="$OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -XX:ReservedCodeCacheSize=2g -Xmx${HEAP_GB}g"
 for rep in $(seq 1 "$REPS"); do
   for side in old new; do
     [ "$side" = old ] && CLASSES=$OLD_CLASSES || CLASSES=$NEW_CLASSES
