@@ -21,11 +21,14 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 JFLAGS="$OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -XX:ReservedCodeCacheSize=2g"
+# Heap: half of this host's MemTotal (at least 2g), the tools/ab_pair.sh
+# rule, for the ScaleUp and the Bench JVM alike (they run one at a time).
+HEAP_GB=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g)}' /proc/meminfo)
 
 if [ ! -d "$SFX1_DIR/lineitem.parquet" ]; then
   echo "[run_sfx1] generating 10x replica at $SFX1_DIR"
   # shellcheck disable=SC2086
-  java $JFLAGS -Xmx32g -cp "$CLASSES:/opt/spark/jars/*" \
+  java $JFLAGS -Xmx${HEAP_GB}g -cp "$CLASSES:/opt/spark/jars/*" \
     graft.ScaleUp /root/testdata/sf0.1 "$SFX1_DIR" 10
 fi
 
@@ -38,4 +41,4 @@ SPARK_GRAFT_BENCH_REPS=1 \
 SPARK_GRAFT_QUERY_TIMEOUT=1800 \
 SPARK_GRAFT_BENCH_ONLY="$QUERIES" \
 SPARK_GRAFT_BENCH_OUT=/root/repo/bench_sf1_raw.json \
-java $JFLAGS -Xmx96g -cp "$CLASSES:/opt/spark/jars/*" graft.Bench
+java $JFLAGS -Xmx${HEAP_GB}g -cp "$CLASSES:/opt/spark/jars/*" graft.Bench

@@ -24,11 +24,14 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 JFLAGS="$OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -XX:ReservedCodeCacheSize=2g"
+# Heap: half of this host's MemTotal (at least 2g), the tools/ab_pair.sh
+# rule, for the ScaleUp and the Bench JVM alike (they run one at a time).
+HEAP_GB=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g)}' /proc/meminfo)
 
 if [ ! -d "$SFX10_DIR/lineitem.parquet" ]; then
   echo "[run_sfx10] generating 100x replica at $SFX10_DIR"
   # shellcheck disable=SC2086
-  java $JFLAGS -Xmx32g -cp "$CLASSES:/opt/spark/jars/*" \
+  java $JFLAGS -Xmx${HEAP_GB}g -cp "$CLASSES:/opt/spark/jars/*" \
     graft.ScaleUp /root/testdata/sf0.1 "$SFX10_DIR" 100
 fi
 
@@ -41,4 +44,4 @@ SPARK_GRAFT_BENCH_REPS=1 \
 SPARK_GRAFT_QUERY_TIMEOUT=3600 \
 SPARK_GRAFT_BENCH_ONLY="$QUERIES" \
 SPARK_GRAFT_BENCH_OUT=/root/repo/bench_sf10_raw.json \
-java $JFLAGS -Xmx96g -cp "$CLASSES:/opt/spark/jars/*" graft.Bench
+java $JFLAGS -Xmx${HEAP_GB}g -cp "$CLASSES:/opt/spark/jars/*" graft.Bench

@@ -2,7 +2,7 @@
 # Isolated-by-default measurement for the state-sensitive sfx10 kernels
 # (r13, VERDICT r12 ask #7 / What's-missing #3): each kernel in
 # tools/sfx10_isolated_kernels.txt runs in its OWN JVM, so the committed
-# number no longer inherits whatever heap/page-cache state the 96 GB-heap
+# number no longer inherits whatever heap/page-cache state the
 # neighbor kernels left behind — the r12 two-rep columns measured 5-6x
 # bands with byte-identical shuffle plans (minhash 114.3 in-run vs 19.6
 # isolated; select_shards 144/234 vs 41 alone). The full in-run pass
@@ -26,6 +26,9 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 JFLAGS="$OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -XX:ReservedCodeCacheSize=2g"
+# Heap: half of this host's MemTotal (at least 2g), the tools/ab_pair.sh
+# rule, for every Bench JVM (they run one at a time).
+HEAP_GB=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g)}' /proc/meminfo)
 
 TMP=$(mktemp -d /tmp/sfx10_iso.XXXXXX)
 while read -r k; do
@@ -37,7 +40,7 @@ while read -r k; do
   SPARK_GRAFT_QUERY_TIMEOUT=3600 \
   SPARK_GRAFT_BENCH_ONLY="$k" \
   SPARK_GRAFT_BENCH_OUT="$TMP/$k.json" \
-  java $JFLAGS -Xmx96g -cp "$CLASSES:/opt/spark/jars/*" graft.Bench \
+  java $JFLAGS -Xmx${HEAP_GB}g -cp "$CLASSES:/opt/spark/jars/*" graft.Bench \
     > /dev/null
 done < "$KERNELS_FILE"
 
