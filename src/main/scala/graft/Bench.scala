@@ -4,7 +4,7 @@ package graft
  * Benchmark harness: runs the headline queries at SPARK_GRAFT_SF_DIR and
  * prints one JSON line. A query that throws is reported under "errors"
  * (name → exception class) instead of being silently timed as if it had
- * succeeded (VERDICT.md r1 "What's wrong" #2).
+ * succeeded.
  */
 object Bench {
 
@@ -51,26 +51,26 @@ object Bench {
     "rel_pricing_summary", "rel_top_orders", "rel_region_revenue",
     "rel_table_profile", "dedup_containment_sketch", "dedup_jaccard_dfcap",
     "aligned_pairs_skew", "aligned_pairs_skew_salted",
-    // r12: the skew exhibit's MITIGATION twin — dfCap excises the
+    // the skew exhibit's MITIGATION twin — dfCap excises the
     // planted head, capped surface linear across both decades
     "aligned_pairs_skew_dfcap", "pii_scrub_v2",
     "rel_top_customers", "rel_monthly_running", "vocab_hll_audit",
     "decontaminate_bloom", "corpus_temperature", "rel_nation_volume",
     "feature_hash", "rel_cheapest_supplier",
-    // r7 cont.: the lossless sub-quadratic jaccard join vs the full
+    // the lossless sub-quadratic jaccard join vs the full
     // kernel it replaces, the bounded-state quantile path, the
     // group-atomic split (dedup-groups chain + hash)
     "dedup_jaccard_prefix",
-    // r11: the planted boilerplate-head pair — uncapped exhibit vs the
+    // the planted boilerplate-head pair — uncapped exhibit vs the
     // maxDf-capped twin (the basket-rules-skew pattern for the prefix
-    // verify's df-head; VERDICT r10 ask #4)
+    // verify's df-head)
     "dedup_jaccard_prefix_head", "dedup_jaccard_prefix_head_capped",
-    // r12: the kernel router — one corpus pass pricing all three rungs
+    // the kernel router — one corpus pass pricing all three rungs
     "dedup_auto",
-    // r13: the cosine-core kernel router — one cell pass pricing the
+    // the cosine-core kernel router — one cell pass pricing the
     // exact/salted/dfcap alignment ladder over the three-regime fixture
     "cosine_auto",
-    // r13: the ANN kernel router — one Lloyd fit + moment pass pricing
+    // the ANN kernel router — one Lloyd fit + moment pass pricing
     // the brute/ivf/lsh_banded ladder over the three-regime embeddings
     "ann_auto",
     "quality_quantiles_sketch", "split_by_group",
@@ -79,7 +79,7 @@ object Bench {
     "events_hourly_uniques", "corpus_clean_split", "doc_chunks_sliding",
     "dedup_minhash_estimate", "events_decay", "rel_order_priority",
     "sample_weighted",
-    // r7 cont. batch 2: new physical shapes — segment-df scrub (bounded
+    // new physical shapes — segment-df scrub (bounded
     // broadcast anti-pattern kill), prefix-blocked levenshtein verify,
     // zero-exchange entropy fold, bigram-marginal PMI top-k, Markov
     // lead-window + aggregate-window, Q14 dim-flag conditional agg,
@@ -117,7 +117,7 @@ object Bench {
     "rel_discount_revenue", "rel_top_supplier",
     // fit + per-doc scoring map stage (the thresholdable column)
     "quality_lr_scores",
-    // r8: the REAL codec round-trip (ImageIO PNG encode→decode in the
+    // the REAL codec round-trip (ImageIO PNG encode→decode in the
     // partition-batched seam); the dangling-mass power iteration over the
     // directed graph (per-round 1-row scalar broadcast on top of the
     // edge join + aggregate)
@@ -130,7 +130,7 @@ object Bench {
     // Q9-shape profit rollup (part-slice broadcast shrinking the fact
     // join); the partitioned-layout slice (directory pruning at plan time)
     "rel_product_profit", "docs_lang_pruned",
-    // r8 cont.: Q11 scalar-threshold stock share, Q16 distinct-pair
+    // Q11 scalar-threshold stock share, Q16 distinct-pair
     // collapse before the class count, Q20 dominance re-aggregate —
     // completing all 22 TPC-H shapes; the WAV codec round-trip twin
     "rel_nation_stock", "rel_supplier_diversity", "rel_dominant_shippers",
@@ -138,11 +138,11 @@ object Bench {
     // degree-ordered node-iterator triangle count over the co-ordered
     // parts graph (the skew-bounded wedge join)
     "graph_triangles",
-    // r13: the triangle kernel router — one edge-linear orient +
+    // the triangle kernel router — one edge-linear orient +
     // out-degree probe pricing the exact-vs-colorful ladder over the
     // organic / planted-clique / tight-budget regimes
     "graph_triangles_auto",
-    // r13: the routed sampled kernel measured beside the exact one —
+    // the routed sampled kernel measured beside the exact one —
     // monochromatic edges at 4 colors cut the wedge shuffle ~16×
     "graph_triangles_colorful",
     // the persisted-index lifecycle: search through the reloaded
@@ -282,86 +282,91 @@ object Bench {
     "rel_rfm_segments",
     // basket rules: canonical pair join + result-sized support joins;
     // the planted mega-basket pair measures the C(basket,2) mass the
-    // basket-size cap removes (r9: the aligned_pairs_skew pattern)
+    // basket-size cap removes (the aligned_pairs_skew pattern)
     "rel_basket_rules", "rel_basket_rules_skew", "rel_basket_rules_skew_capped",
     // weighted sampling via exponential-race keys over the DSIR weights
-    // (ADVICE r8: was the one r8 query missing from the headline list)
     "corpus_dsir_sample",
-    // r9: the measured-stopping-rule graph twins — same per-round plans
+    // the measured-stopping-rule graph twins — same per-round plans
     // as graph_kcore / graph_lpa plus one driver-side count per round,
     // stopping at the fixed point instead of a blind round budget
     "graph_kcore_fixpoint", "graph_lpa_converged",
-    // r9: the IVF-routed sparse cosine ANN (hashed features → Lloyd
+    // the IVF-routed sparse cosine ANN (hashed features → Lloyd
     // lists → symmetric nprobe candidates → exact cosine) and its
     // recall audit against the exact dense top-k
     "cosine_topk_ivf", "cosine_topk_ivf_recall",
-    // r9: the route's per-list occupancy readout (assigned count + the
+    // the route's per-list occupancy readout (assigned count + the
     // enforced sub-split factor) — the audit that measured the Lloyd
     // collapse and now proves the cap's bound at any scale
     "cosine_ivf_occupancy",
-    // r9: exact-substring decontamination — the stride-1 window probe
+    // exact-substring decontamination — the stride-1 window probe
     // (eval side distinct-collapsed and broadcast, train side streamed
     // once; linear in train characters like the suffix array it spells)
     "decontaminate_substring",
-    // r9: the training-set-sized selection cut — same rows/ranks as
+    // the training-set-sized selection cut — same rows/ranks as
     // corpus_select but through Export.globalTopM (deterministic range
     // buckets + offsets; no GlobalLimit/TakeOrdered single-task sink)
     "corpus_select_shards",
-    // r10: unigram-LM tokenizer training (hard EM + row-local Viterbi
+    // unigram-LM tokenizer training (hard EM + row-local Viterbi
     // folds over word types) and its encode readout — the probabilistic
     // twin of vocab_bpe / vocab_bpe_encode, timed side by side
     "vocab_unigram_lm", "vocab_unigram_encode",
-    // r11: the character-coverage twin (floor M-step, planted multi-script doc)
+    // the character-coverage twin (floor M-step, planted multi-script doc)
     "vocab_unigram_coverage",
-    // r10: the clustered-fixture route shootout (VERDICT r9 ask #1) —
-    // exact dense top-k vs IVF on the planted multi-mode matrix, plus
-    // the IVF occupancy/recall audits; the committed rows are the
-    // measured answer to whether any ANN route wins its regime (the
-    // dominated sign-LSH twins were deleted in r11 — see SparseAnn)
+    // the clustered-fixture route shootout — exact dense top-k vs IVF
+    // on the planted multi-mode matrix, plus the IVF occupancy/recall
+    // audits; the committed rows are the measured answer to whether any
+    // ANN route wins its regime (the dominated sign-LSH twins are gone —
+    // see SparseAnn)
     "cosine_topk_clustered",
     "cosine_topk_clustered_ivf", "cosine_clustered_occupancy",
     "cosine_clustered_ivf_recall",
-    // r10: margin-based pair mining — ann_topk_brute's scan + the
+    // margin-based pair mining — ann_topk_brute's scan + the
     // fwd/bwd density windows
     "embed_margin_mining",
-    // r10: exact water-fill epoch allocation (sources-sized after one
+    // exact water-fill epoch allocation (sources-sized after one
     // token-count aggregate)
     "corpus_epochs",
-    // r10: blocklist density gate (zero-exchange higher-order-function
+    // blocklist density gate (zero-exchange higher-order-function
     // projection — no explode, no aggregate; stream-safe by shape)
     "quality_blocklist")
 
   /**
-   * Per-query shuffle-volume accounting (VERDICT r6 ask #5): wall time at
-   * sf0.1 on local[32] cannot catch a plan regression that only costs at
-   * cluster scale (a lost map-side partial, a broadcast that silently
-   * became a shuffle); shuffle bytes can. Stages are attributed to the
-   * query whose job group ([[main]] sets `name#rep`) started them; each
-   * completed stage's write/read byte totals are summed under that group.
-   * A stage reused by several jobs counts once, under the first group
-   * that registered it — the right call for a bench that wants "what did
-   * THIS query's plan shuffle".
+   * Per-query physical-cost readout, one value per field:
+   *
+   *   - shuffle bytes written and read — wall time at sf0.1 cannot catch
+   *     a plan regression that only costs at cluster scale (a lost
+   *     map-side partial, a broadcast that silently became a shuffle);
+   *     shuffle bytes can;
+   *   - the DISK half of a wall step: executor spill bytes (memory- and
+   *     disk-side) and the shuffle-IO wait times (read fetch wait; write
+   *     time). A kernel whose decade step is superlinear on a
+   *     measured-linear logical surface (the single-box I/O knee) carries
+   *     the measurement instead of the inference;
+   *   - the scheduling surface and where task time went: tasks, executor
+   *     run time, CPU time (run time minus blocked I/O and scheduling),
+   *     GC time, and the job and stage counts. Wall ≫ task time / cores
+   *     means driver-bound (planning, eager collects, checkpoint round
+   *     trips); high fetch wait means shuffle-bound.
    */
-  /** Per-query physical-cost readout: shuffle bytes (the r6 regression
-    * tripwire) plus — r12, VERDICT r11 ask #2 — the DISK half of a wall
-    * step: executor spill bytes (memory- and disk-side) and the
-    * shuffle-IO wait times (read fetch wait; write time). A kernel whose
-    * decade step is superlinear on a measured-linear logical surface
-    * ("the single-box I/O knee": graph_triangles 31×, prefix_head_capped
-    * 20×) now carries the measurement instead of the inference. */
   private final case class StageCost(write: Long, read: Long,
-      spillMem: Long, spillDisk: Long, readWaitMs: Long, writeMs: Long) {
-    def +(o: StageCost): StageCost = StageCost(write + o.write,
-      read + o.read, spillMem + o.spillMem, spillDisk + o.spillDisk,
-      readWaitMs + o.readWaitMs, writeMs + o.writeMs)
-    def max(o: StageCost): StageCost = StageCost(math.max(write, o.write),
-      math.max(read, o.read), math.max(spillMem, o.spillMem),
-      math.max(spillDisk, o.spillDisk), math.max(readWaitMs, o.readWaitMs),
-      math.max(writeMs, o.writeMs))
+      spillMem: Long, spillDisk: Long, readWaitMs: Long, writeMs: Long,
+      tasks: Long, runMs: Long, cpuMs: Long, gcMs: Long, stages: Long, jobs: Long) {
+    private def zip(o: StageCost, f: (Long, Long) => Long): StageCost = StageCost(
+      f(write, o.write), f(read, o.read), f(spillMem, o.spillMem),
+      f(spillDisk, o.spillDisk), f(readWaitMs, o.readWaitMs), f(writeMs, o.writeMs),
+      f(tasks, o.tasks), f(runMs, o.runMs), f(cpuMs, o.cpuMs), f(gcMs, o.gcMs),
+      f(stages, o.stages), f(jobs, o.jobs))
+    def +(o: StageCost): StageCost = zip(o, _ + _)
+    def max(o: StageCost): StageCost = zip(o, math.max)
   }
-  private object StageCost { val zero = StageCost(0, 0, 0, 0, 0, 0) }
+  private object StageCost { val zero = StageCost(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0) }
 
-  private final class ShuffleListener extends org.apache.spark.scheduler.SparkListener {
+  /** Attributes each stage to the query whose job group ([[main]] sets
+    * `name#rep`) started it, and counts the group's jobs. A stage reused
+    * by several jobs counts once, under the first group that registered
+    * it — the right call for a bench that wants "what did THIS query's
+    * plan cost". */
+  private final class StageListener extends org.apache.spark.scheduler.SparkListener {
     import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerStageCompleted}
     import scala.collection.concurrent.TrieMap
     private val stageGroup = TrieMap.empty[Int, String]
@@ -371,10 +376,14 @@ object Bench {
       * fetch failure (the plan's logical shuffle volume is what a
       * regression check needs, not the retry-inflated transfer). */
     private val byStage = TrieMap.empty[(String, Int), StageCost]
+    private val jobs = TrieMap.empty[String, Long]
     override def onJobStart(js: SparkListenerJobStart): Unit =
       Option(js.properties)
         .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .foreach(g => js.stageIds.foreach(id => stageGroup.putIfAbsent(id, g)))
+        .foreach { g =>
+          jobs.synchronized(jobs.put(g, jobs.getOrElse(g, 0L) + 1))
+          js.stageIds.foreach(id => stageGroup.putIfAbsent(id, g))
+        }
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
       stageGroup.get(sc.stageInfo.stageId).foreach { g =>
         val m = sc.stageInfo.taskMetrics
@@ -385,13 +394,17 @@ object Bench {
           m.memoryBytesSpilled,
           m.diskBytesSpilled,
           m.shuffleReadMetrics.fetchWaitTime,
-          // writeTime is NANOSECONDS in TaskMetrics (fetchWaitTime is ms)
-          m.shuffleWriteMetrics.writeTime / 1000000L))
+          // writeTime and executorCpuTime are NANOSECONDS in
+          // TaskMetrics (fetchWaitTime, executorRunTime and jvmGCTime are ms)
+          m.shuffleWriteMetrics.writeTime / 1000000L,
+          sc.stageInfo.numTasks, m.executorRunTime,
+          m.executorCpuTime / 1000000L, m.jvmGCTime, 1L, 0L))
       }
-    /** group → summed cost over its stages. */
+    /** group → summed cost over its stages, with its job count. */
     def byGroup: Map[String, StageCost] =
       byStage.toSeq.groupBy(_._1._1).map { case (g, rows) =>
         g -> rows.map(_._2).foldLeft(StageCost.zero)(_ + _)
+          .copy(jobs = jobs.getOrElse(g, 0L))
       }
   }
 
@@ -400,8 +413,8 @@ object Bench {
     val spark = SparkSessions.local("graft-bench",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val all = SparkEntry.queries
-    val shuffles = new ShuffleListener
-    spark.sparkContext.addSparkListener(shuffles)
+    val costs = new StageListener
+    spark.sparkContext.addSparkListener(costs)
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 narrows the run for isolated
     // re-measures on this episodically-starved host (see SparkSessions)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -421,8 +434,8 @@ object Bench {
         spark.catalog.clearCache()
       }
     }
-    // One error per query (ADVICE r2: a double failure used to emit the
-    // same key twice in the errors JSON object).
+    // One error per query: a double failure must not emit the same key
+    // twice in the errors JSON object.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Two timed repetitions, min per query: the host this runs on showed
     // episodic multi-second windows where runnable vCPUs get ~1% of a
@@ -430,7 +443,7 @@ object Bench {
     // window instead of charging host noise to whichever query it hit.
     // Reps are INTERLEAVED (pass 1 over every query, then pass 2) rather
     // than back-to-back: a starvation window spanning both adjacent reps
-    // of one query used to defeat the min entirely (r5: cosine_sparse_all
+    // of one query used to defeat the min entirely (cosine_sparse_all
     // timed 5.0 s in-run vs 3.0 s isolated); with whole-list passes the
     // same query's reps sit minutes apart, so one window can poison at
     // most one rep of each query it overlaps.
@@ -446,10 +459,10 @@ object Bench {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
     // Failed reps contribute no time: min/total only ever see successful
-    // runs (ADVICE r2: a throwing rep's near-zero elapsed used to
-    // understate the total). A rep that TIMES OUT skips the query's
-    // remaining passes (ADVICE r3): the next rep would race the
-    // still-cancelling job and inherit its noise.
+    // runs (a throwing rep's near-zero elapsed would understate the
+    // total). A rep that TIMES OUT skips the query's remaining passes:
+    // the next rep would race the still-cancelling job and inherit its
+    // noise.
     val best = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val skip = scala.collection.mutable.Set.empty[String]
     for (rep <- 1 to reps; name <- names if !skip(name)) {
@@ -468,7 +481,7 @@ object Bench {
             // cancelJobGroup is async: await the action thread's actual
             // death (bounded) so later queries never run concurrently
             // with a still-cancelling job — and so the global pool
-            // thread is released (ADVICE r3)
+            // thread is released
             try Await.result(fut, 60.seconds)
             catch { case _: Throwable => () }
             skip += name
@@ -483,7 +496,7 @@ object Bench {
         best(name) = best.get(name).fold(sec)(math.min(_, sec))
         // eager per-query progress on STDERR (the stdout JSON contract
         // line stays the only stdout output): long single-rep runs are
-        // monitorable, and a mid-run death (the r10 sfx10 disk-fill)
+        // monitorable, and a mid-run death (a sfx10 disk-fill)
         // loses only the in-flight query instead of every timing
         System.err.println(f"[bench] $group $sec%.2fs")
       } else {
@@ -492,11 +505,11 @@ object Bench {
     }
     val results = names.flatMap(n => best.get(n).map(n -> _))
     def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    // 3-decimal timings (VERDICT r6 ask #3): millisecond resolution is
+    // 3-decimal timings: millisecond resolution is
     // already below this host's noise floor, and full-precision doubles
     // doubled the artifact size past the driver's tail capture
-    def r3(v: Double): String = (math.round(v * 1000.0) / 1000.0).toString
-    val qs = results.map { case (k, v) => s"${jstr(k)}:${r3(v)}" }.mkString("{", ",", "}")
+    def dec3(v: Double): String = (math.round(v * 1000.0) / 1000.0).toString
+    val qs = results.map { case (k, v) => s"${jstr(k)}:${dec3(v)}" }.mkString("{", ",", "}")
     val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     // The contract line must be the LAST program output, at column 0:
     // five rounds of driver-side BENCH_r{N}.json came back parsed:null
@@ -507,9 +520,9 @@ object Bench {
     // below cannot miss the final stages' completion events.
     spark.sparkContext.setLogLevel("OFF")
     spark.stop()
-    // per-query shuffle volume: max across reps (reps re-plan the same
+    // per-query cost: each field's max across reps (reps re-plan the same
     // query; max is robust to a rep whose stages were cancelled mid-way)
-    val groups = shuffles.byGroup
+    val groups = costs.byGroup
     val sh = names.flatMap { n =>
       val perRep = (1 to reps).flatMap(r => groups.get(s"$n#$r"))
       if (perRep.isEmpty) None
@@ -518,7 +531,9 @@ object Bench {
     val shJson = sh.map { case (k, c) =>
       s"${jstr(k)}:{\"write\":${c.write},\"read\":${c.read}," +
         s"\"spill_mem\":${c.spillMem},\"spill_disk\":${c.spillDisk}," +
-        s"\"read_wait_ms\":${c.readWaitMs},\"write_ms\":${c.writeMs}}"
+        s"\"read_wait_ms\":${c.readWaitMs},\"write_ms\":${c.writeMs}," +
+        s"\"tasks\":${c.tasks},\"task_ms\":${c.runMs},\"cpu_ms\":${c.cpuMs}," +
+        s"\"gc_ms\":${c.gcMs},\"jobs\":${c.jobs},\"stages\":${c.stages}}"
     }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // vs_prev_shared: the canonical run-over-run ratio is computed AT
@@ -565,13 +580,13 @@ object Bench {
               else {
                 val ps = shared.map(_._1).sum
                 val cs = shared.map(_._2).sum
-                s""","vs_prev_shared":{"n_shared":${shared.size},"prev_sec":${r3(ps)},"cur_sec":${r3(cs)},"ratio":${r3(if (ps > 0) cs / ps else 0.0)},"baseline_commit":${jstr(baseline)}}"""
+                s""","vs_prev_shared":{"n_shared":${shared.size},"prev_sec":${dec3(ps)},"cur_sec":${dec3(cs)},"ratio":${dec3(if (ps > 0) cs / ps else 0.0)},"baseline_commit":${jstr(baseline)}}"""
               }
             case None => ""
           }
       }
     } catch { case _: Throwable => "" }
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"shuffle_bytes":$shJson,"errors":$errs$vsPrev,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${dec3(total)},"unit":"sec","queries":$qs,"shuffle_bytes":$shJson,"errors":$errs$vsPrev,"sf":"$sfDir"}"""
     // The driver captures only a bounded tail of stdout, and at 100+
     // queries the line outgrew it (BENCH_r06 lost its head) — so the
     // full JSON is ALSO written to a repo file the judge can read whole.
@@ -580,7 +595,7 @@ object Bench {
     System.err.flush()
     println("\n" + line)
     // The driver's stdout capture holds only a ~2000-char tail; at 155
-    // queries the full line above outgrows it mid-JSON (BENCH_r06/r07
+    // queries the full line above outgrows it mid-JSON (two artifacts
     // came back parsed:null). The LAST line is therefore a compact,
     // always-parseable summary: total + the slowest queries + error and
     // query counts. The full per-query artifact lives in bench_out.json
@@ -590,9 +605,9 @@ object Bench {
     // a slow query keeps its key however the ranking shifts, with no
     // dependency on a previous artifact
     val slowest = results.sortBy(-_._2).zipWithIndex
-      .collect { case ((k, v), i) if i < 12 || v >= SlowLineSec => s"${jstr(k)}:${r3(v)}" }
+      .collect { case ((k, v), i) if i < 12 || v >= SlowLineSec => s"${jstr(k)}:${dec3(v)}" }
       .take(SlowLineMax).mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","queries":$slowest,"n_queries":${results.size},"n_errors":${errors.size},"full":"bench_out.json"}""")
+    println(s"""{"metric":"total","value":${dec3(total)},"unit":"sec","sf":"$sfDir","queries":$slowest,"n_queries":${results.size},"n_errors":${errors.size},"full":"bench_out.json"}""")
     System.out.flush()
   }
 }

@@ -120,24 +120,23 @@ final class CosineAnalysis(
   /**
    * All (vector0, vector1, coordinate) triples where both vectors have the
    * coordinate, canonical order vector0 > vector1 — the reference's
-   * genFactorNormalizedValue (:168–202) rebuilt as a self-equi-join on the
-   * coordinate. Both join inputs are the same dataset shuffled by the same
-   * key, so Catalyst reuses the exchange; AQE splits skewed coordinates.
+   * genFactorNormalizedValue (:168–202) rebuilt as the coordinate-keyed
+   * [[PairSurface.pairs]] join, its `b` side read as `vector0`. Both join
+   * inputs are the same dataset shuffled by the same key, so Catalyst
+   * reuses the exchange; AQE splits skewed coordinates.
    */
   def alignedPairs(normalized: Dataset[NormalizedElement]): Dataset[FactorNormalizedValue] = {
     val v = normalized.select(
       col(axis).as("vector"),
       col(predictionAxis).as("coord"),
       $"normalized_value".as("nv"))
-    val a = v.as("a")
-    val b = v.as("b")
-    a.join(b, $"a.coord" === $"b.coord" && $"a.vector" > $"b.vector")
+    PairSurface.pairs(v, Seq("coord"), "vector")
       .select(
-        $"a.vector".as("vector0"),
-        $"b.vector".as("vector1"),
-        $"a.coord".as("prediction_axis"),
-        $"a.nv".as("value1"),
-        $"b.nv".as("value2"))
+        $"b.vector".as("vector0"),
+        $"a.vector".as("vector1"),
+        $"b.coord".as("prediction_axis"),
+        $"b.nv".as("value1"),
+        $"a.nv".as("value2"))
       .as[FactorNormalizedValue]
   }
 
@@ -155,7 +154,7 @@ final class CosineAnalysis(
    * equi-join ([[PairSurface.cap]]).
    */
   def dfCap(normalized: Dataset[NormalizedElement], maxDf: Long): Dataset[NormalizedElement] =
-    PairSurface.cap(normalized.toDF(), predictionAxis, maxDf).as[NormalizedElement]
+    PairSurface.cap(normalized.toDF(), Seq(predictionAxis), maxDf).as[NormalizedElement]
 
   /**
    * Skew-proof pair alignment: same output as [[alignedPairs]], built with

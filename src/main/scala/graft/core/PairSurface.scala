@@ -4,18 +4,22 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
- * The pair surface of a self-equi-join, measured before the join runs.
+ * The pair surface of a self-equi-join: priced before the join runs, and
+ * the join itself.
  *
- * Joining a table to itself on `keyCol` emits C(df, 2) rows per key,
- * where df is the key's posting count — the one quadratic term every
+ * Joining a table to itself on its key columns emits C(df, 2) rows per
+ * key, where df is the key's posting count — the one quadratic term every
  * pair kernel here pays (the reference's per-coordinate C(n,2)
- * expansion, MatrixCosineAnalyse.scala:168–202). The kernel routers
- * ([[graft.ext.Dedup.autoRoute]], [[CosineAnalysis.autoRouteAligned]],
- * [[graft.ext.Graph.triangleRoute]]) and the verify regime gate of
- * [[graft.ext.Dedup.jaccardForBySh]] price that term with [[probe]];
- * the df caps ([[graft.ext.Dedup.dfCapShingles]],
- * [[CosineAnalysis.dfCap]], [[graft.ext.Dedup.weightedJaccardDups]])
- * remove the keys above it with [[cap]].
+ * expansion, MatrixCosineAnalyse.scala:168–202). [[pairs]] is that join,
+ * written once: every keyed self-join in graft (the shingle, token,
+ * band, bucket, block, cluster, coordinate, basket and wedge joins, and
+ * the all-pairs baselines) runs through it. [[bandPairs]] is its banded
+ * LSH form (MinHash, SimHash, pHash, the streaming index). The kernel
+ * routers ([[graft.ext.Dedup.autoRoute]],
+ * [[CosineAnalysis.autoRouteAligned]], [[graft.ext.Graph.triangleRoute]])
+ * and the verify regime gate of [[graft.ext.Dedup.jaccardForBySh]] price
+ * the term with [[probe]]; the df and occupancy caps remove the keys above
+ * it with [[cap]].
  */
 private[graft] object PairSurface {
 
@@ -56,18 +60,47 @@ private[graft] object PairSurface {
 
   /**
    * `table` restricted to the keys with df ≤ `maxDf` — the population
-   * [[probe]]'s `capped_pairs` prices. Downstream set sizes and
-   * intersections both see the capped rows, so a pair whose keys all
-   * sit under the cap keeps its exact uncapped answer. One count
-   * aggregate keyed by `keyCol` and one left-semi equi-join, which AQE
+   * [[probe]]'s `capped_pairs` prices, keyed by every column of `keys`
+   * (a shingle, a (band, value) bucket, a prefix block). Downstream set
+   * sizes and intersections both see the capped rows, so a pair whose
+   * keys all sit under the cap keeps its exact uncapped answer. One count
+   * aggregate keyed by `keys` and one left-semi equi-join, which AQE
    * broadcasts when the surviving keys are few.
    */
-  def cap(table: DataFrame, keyCol: String, maxDf: Long): DataFrame = {
+  def cap(table: DataFrame, keys: Seq[String], maxDf: Long): DataFrame = {
     require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
-    val keep = table.groupBy(col(keyCol))
+    val keep = table.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("df"))
       .where(col("df") <= maxDf)
-      .select(col(keyCol))
-    table.join(keep, Seq(keyCol), "left_semi")
+      .select(keys.map(col): _*)
+    table.join(keep, keys, "left_semi")
+  }
+
+  /**
+   * The keyed self-join: `t` as `a` joined to `t` as `b` on every column
+   * of `keys`, plus `a.id < b.id` — each unordered pair sharing a key
+   * once per shared key, in canonical id order. Callers read `a.*` and
+   * `b.*`. Empty `keys` is the all-pairs join of the O(N²) baselines.
+   * Output is Σ_key C(df, 2) rows, the surface [[probe]] prices.
+   */
+  def pairs(t: DataFrame, keys: Seq[String], id: String): DataFrame =
+    t.as("a").join(t.as("b"),
+      keys.map(k => col(s"a.$k") === col(s"b.$k"))
+        .foldRight(col(s"a.$id") < col(s"b.$id"))(_ && _))
+
+  /**
+   * Banded LSH candidates: the distinct (doc0 < doc1) id pairs sharing a
+   * bucket, from one row per (id, bucket) where the bucket is the `keys`
+   * columns (a band index and its value). `maxDf` drops buckets holding
+   * more rows than that ([[cap]]) before any pair is formed; `carry`
+   * rides along from each endpoint as `c0`/`c1` (a sketch the verifier
+   * compares without a join back). One [[pairs]] join and one distinct,
+   * so per-bucket fan-out is C(occupancy, 2), never C(N, 2).
+   */
+  def bandPairs(t: DataFrame, keys: Seq[String], id: String,
+      maxDf: Option[Long] = None, carry: Option[String] = None): DataFrame = {
+    val ends = Seq(col(s"a.$id").as("doc0"), col(s"b.$id").as("doc1")) ++
+      carry.toSeq.flatMap(c => Seq(col(s"a.$c").as("c0"), col(s"b.$c").as("c1")))
+    pairs(maxDf.fold(t)(cap(t, keys, _)), keys, id).select(ends: _*).distinct()
   }
 }

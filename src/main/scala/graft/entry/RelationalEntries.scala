@@ -3,6 +3,7 @@ package graft.entry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.PairSurface
 import graft.ext.{Graph, Relational}
 import EntryUtil._
 
@@ -505,8 +506,7 @@ object RelationalEntries {
   private def coOrderedPartEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Relational.lineitem(s, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-    li.as("a").join(li.as("b"),
-        col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
+    PairSurface.pairs(li, Seq("ok"), "p")
       .select(col("a.p").as("src"), col("b.p").as("dst"))
   }
 

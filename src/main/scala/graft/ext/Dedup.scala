@@ -140,9 +140,7 @@ object Dedup {
    * needs at corpus scale — see [[dfCapShingles]].
    */
   def jaccardPairs(sh: DataFrame, maxDf: Option[Long] = None): DataFrame =
-    overlapCounts(sh, maxDf)
-      .withColumn("jaccard", col("i").cast("double") / (col("n0") + col("n1") - col("i")))
-      .select("doc0", "doc1", "jaccard")
+    overlapCounts(sh, maxDf).select(col("doc0"), col("doc1"), jaccardCol)
 
   /**
    * Shingle document-frequency cap, the dedup mirror of
@@ -156,7 +154,7 @@ object Dedup {
    * ([[graft.core.PairSurface.cap]] semantics).
    */
   def dfCapShingles(sh: DataFrame, maxDf: Long): DataFrame =
-    PairSurface.cap(sh, "sh", maxDf)
+    PairSurface.cap(sh, Seq("sh"), maxDf)
 
   /** Shared pair-overlap kernel: for every pair sharing ≥1 shingle, the
     * intersection size and both set sizes — (doc0, doc1, i, n0, n1) in
@@ -164,17 +162,41 @@ object Dedup {
     * `maxDf` ([[dfCapShingles]]) bounds each term at C(maxDf, 2). */
   private def overlapCounts(sh: DataFrame, maxDf: Option[Long] = None): DataFrame = {
     val capped = maxDf.fold(sh)(dfCapShingles(sh, _))
-    val counts = capped.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val a = capped.as("a")
-    val b = capped.as("b")
-    val inter = a
-      .join(b, col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"))
-      .agg(count(lit(1)).as("i"))
-    inter
-      .join(counts.withColumnRenamed("doc_id", "doc0").withColumnRenamed("n", "n0"), "doc0")
-      .join(counts.withColumnRenamed("doc_id", "doc1").withColumnRenamed("n", "n1"), "doc1")
+    withSizes(sharedCounts(capped, "i"), docSizes(capped))
   }
+
+  /** Shared-shingle count `as` per (doc0, doc1): the shingle-keyed
+    * [[PairSurface.pairs]] join and one map-side-partial count, Σ_sh
+    * C(df, 2) skinny rows. */
+  private def sharedCounts(sh: DataFrame, as: String): DataFrame =
+    PairSurface.pairs(sh, Seq("sh"), "doc_id")
+      .groupBy(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"))
+      .agg(count(lit(1)).as(as))
+
+  /** Shared-shingle count `as` of the given (doc0, doc1) pairs only,
+    * CANDIDATE-FIRST: each pair meets its endpoints' shingle rows through
+    * two id equi-joins — |pairs| × shingles-per-doc rows, never the
+    * co-shingled surface. */
+  private def candidateCounts(pairs: DataFrame, sh: DataFrame, as: String): DataFrame =
+    pairs
+      .join(sh.select(col("doc_id").as("doc0"), col("sh")), Seq("doc0"))
+      .join(sh.select(col("doc_id").as("doc1"), col("sh")), Seq("doc1", "sh"))
+      .groupBy("doc0", "doc1").agg(count(lit(1)).as(as))
+
+  /** Per-document shingle count (doc_id, n): the set sizes. */
+  private def docSizes(sh: DataFrame): DataFrame =
+    sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+
+  /** `pairs` with each endpoint's per-document size from `sizes`
+    * (doc_id, n) as `n0`/`n1` — the one size join of every pair kernel. */
+  private def withSizes(pairs: DataFrame, sizes: DataFrame): DataFrame =
+    pairs
+      .join(sizes.select(col("doc_id").as("doc0"), col("n").as("n0")), "doc0")
+      .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), "doc1")
+
+  /** Jaccard from the overlap `i` and the set sizes `n0`, `n1`. */
+  private def jaccardCol: Column =
+    (col("i").cast("double") / (col("n0") + col("n1") - col("i"))).as("jaccard")
 
   /**
    * Threshold-calibration sweep for the exact Jaccard kernel — the
@@ -195,7 +217,7 @@ object Dedup {
    */
   def jaccardThresholdSweep(docs: DataFrame, idCol: String, textCol: String,
       thresholds: Seq[Double], maxDf: Option[Long] = None): DataFrame = {
-    require(thresholds.nonEmpty)
+    require(thresholds.nonEmpty, "thresholds must be non-empty")
     val pairs = jaccardPairs(shingles(docs, idCol, textCol), maxDf)
     val expl = pairs.select(col("doc0"), col("doc1"),
         explode(array(thresholds.map(lit): _*)).as("t"), col("jaccard"))
@@ -267,25 +289,22 @@ object Dedup {
    * at C(maxDf, 2) per token, and result-sized joins back to per-doc tf
    * totals (Σmax = S₀ + S₁ − Σmin, so only Σmin needs the pair join).
    * All counts are exact integers; only the final ratio is floating.
+   * Duplicate ids: rows that share an id are one document holding all
+   * their tokens (their term frequencies add up).
    */
   def weightedJaccardDups(docs: DataFrame, idCol: String, textCol: String,
       minWj: Double = 0.5, maxDf: Long = 200): DataFrame = {
     val tf = TextAnalysis.tokenArray(docs, idCol, textCol)
       .select(col("doc_id"), explode(col("t")).as("token"))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val capped = PairSurface.cap(tf, "token", maxDf)
-    val sums = capped.groupBy("doc_id").agg(sum(col("tf")).as("s"))
-    val smin = capped.as("a").join(capped.as("b"),
-        col("a.token") === col("b.token") &&
-          col("a.doc_id") < col("b.doc_id"))
+    val capped = PairSurface.cap(tf, Seq("token"), maxDf)
+    val smin = PairSurface.pairs(capped, Seq("token"), "doc_id")
       .groupBy(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"))
       .agg(sum(least(col("a.tf"), col("b.tf"))).as("smin"))
-    smin
-      .join(sums.select(col("doc_id").as("doc0"), col("s").as("s0")), "doc0")
-      .join(sums.select(col("doc_id").as("doc1"), col("s").as("s1")), "doc1")
+    withSizes(smin, capped.groupBy("doc_id").agg(sum(col("tf")).as("n")))
       .select(col("doc0"), col("doc1"),
         (col("smin").cast("double") /
-          (col("s0") + col("s1") - col("smin")).cast("double")).as("wjaccard"))
+          (col("n0") + col("n1") - col("smin")).cast("double")).as("wjaccard"))
       .where(col("wjaccard") >= minWj)
   }
 
@@ -345,14 +364,8 @@ object Dedup {
    * small sf for its extra df/count aggregates and rank window, the
    * same constant-vs-asymptote trade the ANN twins document.
    */
-  def prefixCandidates(sh: DataFrame, minJaccard: Double): DataFrame = {
-    val prefix = prefixTable(sh, minJaccard)
-    prefix.as("a")
-      .join(prefix.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"))
-      .distinct()
-  }
+  def prefixCandidates(sh: DataFrame, minJaccard: Double): DataFrame =
+    PairSurface.bandPairs(prefixTable(sh, minJaccard), Seq("sh"), "doc_id")
 
   /**
    * Exact Jaccard near-dup pairs via [[prefixCandidates]] + bounded
@@ -373,6 +386,11 @@ object Dedup {
    * a single shingle derivation should pass the checkpoint pin (the
    * contract entries do) or force the gate via
    * `jaccardForBySh(..., pruneCandidateDocs = Some(b))`.
+   *
+   * Duplicate ids: every input row adds its shingles again, so a
+   * repeated doc-id row counts into both the set sizes and the overlaps
+   * (an id repeated k times beside a copy of its text scores k) — the
+   * [[minHashDups]] answer. Deduplicate rows by id first.
    */
   def prefixJaccardDups(docs: DataFrame, idCol: String, textCol: String,
       minJaccard: Double = 0.3,
@@ -520,31 +538,26 @@ object Dedup {
    * `maxBlock` guards it — blocks larger than `maxBlock` docs are
    * dropped whole (same Zipf-head semantics as [[dfCapShingles]]: a
    * block that common is template chrome, not near-dup signal).
+   *
+   * Duplicate ids: each input row is its own record, so a pair is
+   * emitted once per matching row pair.
    */
   def editDistanceDups(docs: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3, prefixLen: Int = 12,
       maxBlock: Option[Long] = None): DataFrame = {
-    require(maxDist >= 0 && prefixLen >= 1)
+    require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
+    require(prefixLen >= 1, s"prefixLen must be >= 1, got $prefixLen")
+    require(maxBlock.forall(_ >= 2),
+      s"maxBlock must be >= 2: a block below 2 can never pair, got ${maxBlock.get}")
     val n = docs.select(col(idCol).as("id"),
         normalizeText(col(textCol)).as("txt"))
       .withColumn("blk", substring(col("txt"), 1, prefixLen))
       .withColumn("len", length(col("txt")).cast("long"))
-    val blocked = maxBlock match {
-      case Some(cap) =>
-        require(cap >= 2)
-        val keep = n.groupBy(col("blk")).agg(count(lit(1)).as("bs"))
-          .where(col("bs") <= cap).select(col("blk"))
-        n.join(keep, Seq("blk"), "left_semi")
-      case None => n
-    }
-    val a = blocked.select(col("blk"), col("id").as("doc0"),
-      col("txt").as("t0"), col("len").as("len0"))
-    val b = blocked.select(col("blk"), col("id").as("doc1"),
-      col("txt").as("t1"), col("len").as("len1"))
-    a.join(b, Seq("blk"))
-      .where(col("doc0") < col("doc1") &&
-        abs(col("len0") - col("len1")) <= maxDist)
-      .withColumn("dist", levenshtein(col("t0"), col("t1"), maxDist))
+    val blocked = maxBlock.fold(n)(PairSurface.cap(n, Seq("blk"), _))
+    PairSurface.pairs(blocked, Seq("blk"), "id")
+      .where(abs(col("a.len") - col("b.len")) <= maxDist)
+      .select(col("a.id").as("doc0"), col("b.id").as("doc1"),
+        levenshtein(col("a.txt"), col("b.txt"), maxDist).as("dist"))
       .where(col("dist") >= 0)
       .select(col("doc0"), col("doc1"), col("dist").cast("long").as("dist"))
   }
@@ -750,16 +763,8 @@ object Dedup {
    * Mass-duplicate corpora should run [[exact]] first — identical docs
    * always share every bucket.
    */
-  def minHashCandidates(sigs: DataFrame): DataFrame = {
-    val bands = minHashBands(sigs)
-    val a = bands.as("a")
-    val b = bands.as("b")
-    a.join(b,
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"))
-      .distinct()
-  }
+  def minHashCandidates(sigs: DataFrame): DataFrame =
+    PairSurface.bandPairs(minHashBands(sigs), Seq("band", "bkey"), "doc_id")
 
   /** One (doc_id, band, bkey) row per document per LSH band — the join key
     * table behind [[minHashCandidates]], exposed for index-building
@@ -907,18 +912,9 @@ object Dedup {
    * Pairs sharing no shingle produce no row (their Jaccard, 0, can never
    * reach a positive threshold).
    */
-  def jaccardFor(pairs: DataFrame, sh: DataFrame): DataFrame = {
-    val counts = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val a = sh.select(col("doc_id").as("doc0"), col("sh"))
-    val b = sh.select(col("doc_id").as("doc1"), col("sh"))
-    pairs.join(a, "doc0").join(b, Seq("doc1", "sh"))
-      .groupBy("doc0", "doc1")
-      .agg(count(lit(1)).as("i"))
-      .join(counts.withColumnRenamed("doc_id", "doc0").withColumnRenamed("n", "n0"), "doc0")
-      .join(counts.withColumnRenamed("doc_id", "doc1").withColumnRenamed("n", "n1"), "doc1")
-      .withColumn("jaccard", col("i").cast("double") / (col("n0") + col("n1") - col("i")))
-      .select("doc0", "doc1", "jaccard")
-  }
+  def jaccardFor(pairs: DataFrame, sh: DataFrame): DataFrame =
+    withSizes(candidateCounts(pairs, sh, "i"), docSizes(sh))
+      .select(col("doc0"), col("doc1"), jaccardCol)
 
   /**
    * [[jaccardFor]] with the INTERSECTION-FIRST physical shape: the
@@ -1000,7 +996,6 @@ object Dedup {
           .union(pairs.select(col("doc1").as("doc_id"))).distinct()
         sh.join(candDocs, Seq("doc_id"), "left_semi")
       } else sh
-    val counts = shp.groupBy("doc_id").agg(count(lit(1)).as("n"))
     // HEAVY-SHINGLE SPLIT (the basketPairSupports pattern, guide
     // §2.5 — special-case the hot keys): in the df-head regime the
     // self-join's Σ_sh C(df, 2) surface is owned by a handful of
@@ -1031,28 +1026,13 @@ object Dedup {
         .where(col("df") * col("df") > col("p")).select("sh")
       val shLight = shp.join(broadcast(heavy), Seq("sh"), "left_anti")
       val shHeavy = shp.join(broadcast(heavy), Seq("sh"), "left_semi")
-      val iLight = shLight.as("a")
-        .join(shLight.as("b"), col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"))
-        .agg(count(lit(1)).as("il"))
-      val iHeavy = pairs
-        .join(shHeavy.select(col("doc_id").as("doc0"), col("sh")), Seq("doc0"))
-        .join(shHeavy.select(col("doc_id").as("doc1"), col("sh")), Seq("doc1", "sh"))
-        .groupBy("doc0", "doc1").agg(count(lit(1)).as("ih"))
-      iLight.join(iHeavy, Seq("doc0", "doc1"), "full_outer")
+      sharedCounts(shLight, "il")
+        .join(candidateCounts(pairs, shHeavy, "ih"), Seq("doc0", "doc1"), "full_outer")
         .select(col("doc0"), col("doc1"),
           (coalesce(col("il"), lit(0L)) + coalesce(col("ih"), lit(0L))).as("i"))
-    } else {
-      shp.as("a")
-        .join(shp.as("b"), col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"))
-        .agg(count(lit(1)).as("i"))
-    }
-    pairs.join(inter, Seq("doc0", "doc1"))
-      .join(counts.withColumnRenamed("doc_id", "doc0").withColumnRenamed("n", "n0"), "doc0")
-      .join(counts.withColumnRenamed("doc_id", "doc1").withColumnRenamed("n", "n1"), "doc1")
-      .withColumn("jaccard", col("i").cast("double") / (col("n0") + col("n1") - col("i")))
-      .select("doc0", "doc1", "jaccard")
+    } else sharedCounts(shp, "i")
+    withSizes(pairs.join(inter, Seq("doc0", "doc1")), docSizes(shp))
+      .select(col("doc0"), col("doc1"), jaccardCol)
   }
 
   /**
@@ -1063,6 +1043,11 @@ object Dedup {
    * verification branch; callers who want it cached persist it themselves
    * (caching is caller-owned, like `MatrixModel.persist` — this function
    * must not leak cache entries from long-lived sessions).
+   *
+   * Duplicate ids: every input row adds its shingles again, so a
+   * repeated doc-id row counts into both the set sizes and the overlaps
+   * (an id repeated k times beside a copy of its text scores k).
+   * Deduplicate rows by id first.
    */
   def minHashDupsFromShingles(sh: DataFrame, minJaccard: Double = 0.2): DataFrame =
     jaccardFor(minHashCandidates(minHashSignatures(sh)), sh)
@@ -1376,17 +1361,27 @@ object Dedup {
   /**
    * Per-document SimHash over the distinct shingle set: bit i is the sign
    * of Σ_shingles (±1) where the shingle votes +1 iff its hash has bit i
-   * set. One aggregate, 24 counter columns — no row explosion.
+   * set. One aggregate, 24 counter columns — no row explosion. Rows
+   * that share an id are one document holding all their shingles (one
+   * sketch per id), which is the duplicate-id answer of every SimHash
+   * dedup route.
    */
-  def simHash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sh = shingles(docs, idCol, textCol)
-    val sums = (0 until SimHashBits).map { i =>
-      sum(when(expr(s"shiftright(sh, $i) & 1") === 1, 1L).otherwise(-1L)).as(s"s_$i")
+  def simHash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    signSketch(shingles(docs, idCol, textCol),
+      (0 until SimHashBits).map(i => s"shiftright(sh, $i) & 1"))
+
+  /** The sign-vote sketch builder behind [[simHash]] and [[simHashWide]]:
+    * bit i of `simhash` is set iff more of the document's rows have vote
+    * `bits(i)` (a 0/1 SQL expression) at 1 than at 0. One doc-keyed
+    * aggregate of one counter column per bit. */
+  private def signSketch(rows: DataFrame, bits: Seq[String]): DataFrame = {
+    val sums = bits.zipWithIndex.map { case (b, i) =>
+      sum(when(expr(b) === 1, 1L).otherwise(-1L)).as(s"s_$i")
     }
-    val hash = (0 until SimHashBits)
+    val hash = bits.indices
       .map(i => when(col(s"s_$i") > 0, lit(1L << i)).otherwise(lit(0L)): Column)
       .reduce(_ + _)
-    sh.groupBy("doc_id").agg(sums.head, sums.tail: _*)
+    rows.groupBy("doc_id").agg(sums.head, sums.tail: _*)
       .select(col("doc_id"), hash.as("simhash"))
   }
 
@@ -1402,23 +1397,33 @@ object Dedup {
    * scan. Pairs sharing several chunks are deduplicated; both sketches
    * ride along so the verifier needs no join back.
    */
-  def simHashCandidates(sketches: DataFrame): DataFrame = {
-    val chunkBits = SimHashBits / SimHashChunks
-    val mask = (1 << chunkBits) - 1
+  def simHashCandidates(sketches: DataFrame): DataFrame =
+    chunkPairs(sketches, SimHashBits, SimHashChunks, None)
+      .select(col("doc0"), col("doc1"), col("c0").as("h0"), col("c1").as("h1"))
+
+  /** Pigeonhole band candidates over `chunks` equal slices of a
+    * `bits`-wide `simhash`: the distinct pairs agreeing on some
+    * (chunk, value) bucket, buckets above `maxBucket` dropped, both
+    * sketches carried as `c0`/`c1` ([[PairSurface.bandPairs]]). */
+  private def chunkPairs(sketches: DataFrame, bits: Int, chunks: Int,
+      maxBucket: Option[Long]): DataFrame = {
+    val chunkBits = bits / chunks
+    val mask = (1L << chunkBits) - 1
     val chunked = sketches.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until SimHashChunks).map(c =>
+      posexplode(array((0 until chunks).map(c =>
         expr(s"shiftright(simhash, ${c * chunkBits}) & $mask")): _*))
         .as(Seq("chunk", "cval")))
-    val a = chunked.as("a")
-    val b = chunked.as("b")
-    a.join(b,
-        col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"),
-        col("a.simhash").as("h0"), col("b.simhash").as("h1"))
-      .distinct()
+    PairSurface.bandPairs(chunked, Seq("chunk", "cval"), "doc_id", maxBucket,
+      carry = Some("simhash"))
   }
+
+  /** The hamming verify of sketch pairs (doc0, doc1, c0, c1): pairs at
+    * hamming ≤ `maxHamming`, as (doc0, doc1, hamming). */
+  private def hammingWithin(cands: DataFrame, maxHamming: Int): DataFrame =
+    cands
+      .select(col("doc0"), col("doc1"),
+        expr("CAST(bit_count(c0 ^ c1) AS BIGINT)").as("hamming"))
+      .where(col("hamming") <= maxHamming)
 
   /** Default band-bucket occupancy cap of the wide SimHash route when
     * reached through the obvious [[simHashDups]] name: far above the
@@ -1465,18 +1470,13 @@ object Dedup {
    */
   def simHashDups24(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
-    val cands =
-      if (maxHamming < SimHashChunks) simHashCandidates(simHash(docs, idCol, textCol))
-      else {
-        val sk = simHash(docs, idCol, textCol)
-        sk.as("a").join(sk.as("b"), col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"),
-            col("a.simhash").as("h0"), col("b.simhash").as("h1"))
-      }
-    cands
-      .select(col("doc0"), col("doc1"),
-        expr("CAST(bit_count(h0 ^ h1) AS BIGINT)").as("hamming"))
-      .where(col("hamming") <= maxHamming)
+    val sk = simHash(docs, idCol, textCol)
+    hammingWithin(
+      if (maxHamming < SimHashChunks) chunkPairs(sk, SimHashBits, SimHashChunks, None)
+      else PairSurface.pairs(sk, Nil, "doc_id")
+        .select(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"),
+          col("a.simhash").as("c0"), col("b.simhash").as("c1")),
+      maxHamming)
   }
 
   /** Wide-sketch geometry: 60 sign bits (30 from each of two avalanched
@@ -1513,16 +1513,9 @@ object Dedup {
     val av = shingles(docs, idCol, textCol).select(col("doc_id"),
       expr(TextHash.avalancheSql("sh", SimHashWideSaltA)).as("a1"),
       expr(TextHash.avalancheSql("sh", SimHashWideSaltB)).as("a2"))
-    val sums = (0 until SimHashWideBits).map { i =>
-      val (src, j) = if (i < half) ("a1", i) else ("a2", i - half)
-      sum(when(expr(s"shiftright($src, $j) & 1") === 1, 1L).otherwise(-1L))
-        .as(s"s_$i")
-    }
-    val hash = (0 until SimHashWideBits)
-      .map(i => when(col(s"s_$i") > 0, lit(1L << i)).otherwise(lit(0L)): Column)
-      .reduce(_ + _)
-    av.groupBy("doc_id").agg(sums.head, sums.tail: _*)
-      .select(col("doc_id"), hash.as("simhash"))
+    signSketch(av, (0 until SimHashWideBits).map { i =>
+      if (i < half) s"shiftright(a1, $i) & 1" else s"shiftright(a2, ${i - half}) & 1"
+    })
   }
 
   /**
@@ -1549,28 +1542,12 @@ object Dedup {
   def simHashWideDups(docs: DataFrame, idCol: String, textCol: String,
       maxBucket: Long, maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming < SimHashWideChunks,
-      s"${SimHashWideChunks}-chunk pigeonhole is complete only for hamming < $SimHashWideChunks")
-    require(maxBucket >= 2, "a bucket below 2 can never pair")
-    val chunkBits = SimHashWideBits / SimHashWideChunks
-    val mask = (1L << chunkBits) - 1
-    val chunked = simHashWide(docs, idCol, textCol)
-      .select(col("doc_id"), col("simhash"),
-        posexplode(array((0 until SimHashWideChunks).map(c =>
-          expr(s"shiftright(simhash, ${c * chunkBits}) & $mask")): _*))
-          .as(Seq("chunk", "cval")))
-    val keep = chunked.groupBy("chunk", "cval")
-      .agg(count(lit(1)).as("n"))
-      .where(col("n") <= maxBucket).select("chunk", "cval")
-    val kb = chunked.join(keep, Seq("chunk", "cval"), "left_semi")
-    kb.as("a").join(kb.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"),
-        col("a.simhash").as("h0"), col("b.simhash").as("h1"))
-      .distinct()
-      .select(col("doc0"), col("doc1"),
-        expr("CAST(bit_count(h0 ^ h1) AS BIGINT)").as("hamming"))
-      .where(col("hamming") <= maxHamming)
+      s"maxHamming must be in [0, $SimHashWideChunks): the ${SimHashWideChunks}-chunk " +
+        s"pigeonhole is complete only below it, got $maxHamming")
+    require(maxBucket >= 2,
+      s"maxBucket must be >= 2: a bucket below 2 can never pair, got $maxBucket")
+    hammingWithin(chunkPairs(simHashWide(docs, idCol, textCol), SimHashWideBits,
+      SimHashWideChunks, Some(maxBucket)), maxHamming)
   }
 
   /**
@@ -1715,7 +1692,7 @@ object Dedup {
    */
   def dupGroups(docs: DataFrame, pairs: DataFrame, idCol: String,
       rounds: Int = 4): DataFrame = {
-    require(rounds >= 1)
+    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val ids = docs.select(col(idCol).as("doc_id"))
     val edges = withSelfLoops(ids, undirected(pairs))
     var lbl = ids.select(col("doc_id"), col("doc_id").as("group_rep"))
@@ -1815,13 +1792,10 @@ object Dedup {
    */
   def dupGroupsStars(docs: DataFrame, pairs: DataFrame, idCol: String,
       maxRounds: Int = 40): DataFrame = {
-    require(maxRounds >= 1, "maxRounds must be >= 1")
-    def ckpt(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
+    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val ids = docs.select(col(idCol).as("doc_id"))
     // canonical (big > small) distinct edges, corpus endpoints only
-    var edges = ckpt(pairs
+    var edges = pinRound(pairs
       .select(col("doc0").as("a"), col("doc1").as("b"))
       .join(ids.select(col("doc_id").as("a")), Seq("a"), "left_semi")
       .join(ids.select(col("doc_id").as("b")), Seq("b"), "left_semi")
@@ -1852,13 +1826,17 @@ object Dedup {
         .where(col("big") =!= col("small"))
         .distinct()
     }
+    // each pinned edge set is counted once; the count carries into the
+    // next round's equality check
+    var n = edges.count()
     var round = 0
-    var stable = edges.isEmpty
+    var stable = n == 0
     while (!stable && round < maxRounds) {
-      val next = ckpt(smallStar(largeStar(edges)))
-      stable = next.count() == edges.count() &&
-        next.except(edges).isEmpty
+      val next = pinRound(smallStar(largeStar(edges)))
+      val m = next.count()
+      stable = m == n && next.except(edges).isEmpty
       edges = next
+      n = m
       round += 1
     }
     ids.join(edges.select(col("big").as("doc_id"), col("small").as("rep")),
@@ -1895,6 +1873,13 @@ object Dedup {
       .agg(min(col("nrep")).as("group_rep"))
       .withColumnRenamed("src", "doc_id")
 
+  /** Pins a per-round table and cuts its lineage: through the session's
+    * reliable checkpoint directory when one is set (survives executor
+    * loss), as executor-local blocks otherwise. */
+  private def pinRound(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
+
   /** Pointer-doubling compression: each label jumps to its own label's
     * label. Labels are always ids of reachable docs, so the lookup is
     * total (inner join) and the jump stays inside the component. */
@@ -1924,17 +1909,14 @@ object Dedup {
    */
   def dupGroupsConverged(docs: DataFrame, pairs: DataFrame, idCol: String,
       maxRounds: Int = 40): DataFrame = {
-    require(maxRounds >= 1)
-    def ckpt(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
+    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val ids = docs.select(col(idCol).as("doc_id"))
-    val edges = ckpt(withSelfLoops(ids, undirected(pairs)))
-    var lbl = ckpt(ids.select(col("doc_id"), col("doc_id").as("group_rep")))
+    val edges = pinRound(withSelfLoops(ids, undirected(pairs)))
+    var lbl = pinRound(ids.select(col("doc_id"), col("doc_id").as("group_rep")))
     var round = 0
     var changed = 1L
     while (changed > 0 && round < maxRounds) {
-      val next = ckpt(compress(propagateMin(edges, lbl)))
+      val next = pinRound(compress(propagateMin(edges, lbl)))
       changed = next.as("n")
         .join(lbl.as("p"), "doc_id")
         .where(col("n.group_rep") =!= col("p.group_rep"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkS
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.PairSurface
+
 /**
  * Similarity search over embedding columns (`array<float>`): exact cosine
  * via higher-order functions, brute-force top-k as the correctness
@@ -57,7 +59,7 @@ object Embeddings {
    */
   def allPairsCosine(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val n = withNorms(emb, idCol, vecCol)
-    val pairs = n.as("a").join(n.as("b"), col("a.vec_id") < col("b.vec_id"))
+    val pairs = PairSurface.pairs(n, Nil, "vec_id")
       .select(
         col("a.vec_id").as("v0"), col("b.vec_id").as("v1"),
         (expr(dotSql("a.emb", "b.emb")) / (col("a.nrm") * col("b.nrm"))).as("c"))
@@ -1090,8 +1092,7 @@ object Embeddings {
         val n = withNorms(emb, idCol, vecCol)
           .join(kMeansAssign(emb, idCol, vecCol, k, iters)
             .select(col("vec_id"), col("cluster")), "vec_id")
-        n.as("a").join(n.as("b"), col("a.cluster") === col("b.cluster") &&
-            col("a.vec_id") < col("b.vec_id"))
+        PairSurface.pairs(n, Seq("cluster"), "vec_id")
           .select(col("a.vec_id").as("v0"), col("b.vec_id").as("v1"),
             snapCol(expr(dotSql("a.emb", "b.emb")) /
               (col("a.nrm") * col("b.nrm"))).as("cosine"))
@@ -1797,8 +1798,7 @@ object Embeddings {
       groupCol: String, eps: Double): DataFrame = {
     val n = withNorms(emb, idCol, vecCol)
       .join(emb.select(col(idCol).as("vec_id"), col(groupCol).as("grp")), "vec_id")
-    val dropped = n.as("a").join(n.as("b"),
-        col("a.grp") === col("b.grp") && col("a.vec_id") < col("b.vec_id"))
+    val dropped = PairSurface.pairs(n, Seq("grp"), "vec_id")
       .select(col("b.vec_id").as("vec_id"),
         snapCol(expr(dotSql("a.emb", "b.emb")) / (col("a.nrm") * col("b.nrm"))).as("c"))
       .where(col("c") >= eps)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.PairSurface
+
 /**
  * Batch analytics over the event stream table: tumbling-window aggregation
  * and gap-based sessionization.
@@ -905,8 +907,7 @@ object Events {
       .select(col("t"), expr(s"CAST(h2 % $HllM AS BIGINT)").as("j"),
         expr(hllRhoSql(s"CAST((h2 - h2 % $HllM) / $HllM AS BIGINT)")).as("rho"))
       .groupBy("t", "j").agg(max(col("rho")).as("mj"))
-    val exact = du.as("a").join(du.as("b"),
-        col("a.u") === col("b.u") && col("a.t") < col("b.t"))
+    val exact = PairSurface.pairs(du, Seq("u"), "t")
       .groupBy(col("a.t").as("t0"), col("b.t").as("t1"))
       .agg(count(lit(1)).as("n_exact"))
     reachOverlapEstimates(regs)
@@ -935,8 +936,8 @@ object Events {
     val single = hllEstimateFromRegisters(regs, Seq("t"))
       .select(col("t"), col("hll_est"))
     val types = regs.select("t").distinct()
-    val pairs = types.as("x").join(types.as("y"), col("x.t") < col("y.t"))
-      .select(col("x.t").as("t0"), col("y.t").as("t1"))
+    val pairs = PairSurface.pairs(types, Nil, "t")
+      .select(col("a.t").as("t0"), col("b.t").as("t1"))
     val uniRegs = pairs
       .select(col("t0"), col("t1"),
         explode(array(col("t0"), col("t1"))).as("t"))

@@ -698,9 +698,7 @@ object Graph {
       .union(und.select(col("v").as("w"), col("u").as("n")))
     val deg = adj.groupBy("w").agg(count(lit(1)).as("deg"))
     val capped = adj.join(deg.where(col("deg") <= maxDeg), "w")
-    val wedges = capped.as("a")
-      .join(capped.as("b"),
-        col("a.w") === col("b.w") && col("a.n") < col("b.n"))
+    val wedges = PairSurface.pairs(capped, Seq("w"), "n")
       .select(col("a.n").as("u"), col("b.n").as("v"),
         col("a.deg").as("dw"))
     wedges.groupBy("u", "v")

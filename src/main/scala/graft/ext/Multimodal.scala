@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.PairSurface
+
 /** Typed metadata for one media payload. */
 final case class MediaFeatures(doc_id: Long, n_bytes: Long, feature: Array[Float])
 
@@ -367,13 +369,20 @@ object Multimodal {
    * the recall contract mirrors the df-cap: pairs agreeing only in
    * capped bands are missed, so pigeonhole completeness holds for
    * every pair with at least one surviving agreeing band.
+   *
+   * Duplicate ids: candidates are distinct id pairs, then every hash row
+   * of either endpoint is verified, so a pair is emitted once per
+   * (row, row) combination within `maxHamming`; a repeated row also
+   * counts twice toward its buckets' occupancy.
    */
   def phashDups(hashes: DataFrame, maxHamming: Int = 3,
       maxBucket: Option[Long] = None): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
-      "4-band pigeonhole is complete only for hamming <= 3")
-    require(maxBucket.forall(_ >= 2), "a bucket below 2 can never pair")
-    val allBands = hashes.select(col("doc_id"), col("lo"), col("hi"),
+      s"maxHamming must be in [0, 3]: the 4-band pigeonhole is complete " +
+        s"only there, got $maxHamming")
+    require(maxBucket.forall(_ >= 2),
+      s"maxBucket must be >= 2: a bucket below 2 can never pair, got ${maxBucket.get}")
+    val bands = hashes.select(col("doc_id"), col("lo"), col("hi"),
         explode(expr(
           """array(
             |  struct(0L AS b, lo & 65535 AS key),
@@ -382,18 +391,7 @@ object Multimodal {
             |  struct(3L AS b, shiftright(hi, 16) & 65535 AS key))""".stripMargin))
           .as("bk"))
       .select(col("doc_id"), col("bk.b").as("b"), col("bk.key").as("key"))
-    val bands = maxBucket.fold(allBands) { cap =>
-      val keep = allBands.groupBy("b", "key")
-        .agg(count(lit(1)).as("n"))
-        .where(col("n") <= cap).select("b", "key")
-      allBands.join(keep, Seq("b", "key"), "left_semi")
-    }
-    val cand = bands.as("a").join(bands.as("c"),
-        col("a.b") === col("c.b") && col("a.key") === col("c.key") &&
-          col("a.doc_id") < col("c.doc_id"))
-      .select(col("a.doc_id").as("doc0"), col("c.doc_id").as("doc1"))
-      .distinct()
-    cand
+    PairSurface.bandPairs(bands, Seq("b", "key"), "doc_id", maxBucket)
       .join(hashes.select(col("doc_id").as("doc0"), col("lo").as("lo0"),
         col("hi").as("hi0")), "doc0")
       .join(hashes.select(col("doc_id").as("doc1"), col("lo").as("lo1"),

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.PairSurface
+
 /**
  * Relational star-schema analytics over the warehouse tables
  * (lineitem / orders / customer / supplier / nation / region) — the
@@ -1163,8 +1165,7 @@ object Relational {
   private def basketPairSupports(op: DataFrame, sizes: DataFrame,
       minSupport: Long, maxBasket: Long): DataFrame = {
     def exactPairs(t: DataFrame): DataFrame =
-      t.as("a").join(t.as("b"),
-          col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
+      PairSurface.pairs(t, Seq("ok"), "p")
         .groupBy(col("a.p").as("pa"), col("b.p").as("pb"))
         .agg(count(lit(1)).as("sup_ab"))
     if (maxBasket <= BasketSplitThreshold)

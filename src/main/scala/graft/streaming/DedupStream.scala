@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.core.PairSurface
 import graft.ext.Dedup
 
 /**
@@ -302,13 +303,11 @@ object DedupStream {
         .select(
           least(col("a.doc_id"), col("b.doc_id")).as("doc0"),
           greatest(col("a.doc_id"), col("b.doc_id")).as("doc1"))
-      // new vs new: the batch's own collisions
-      val vsNew = newBands.as("a")
-        .join(newBands.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"))
-      val cands = vsOld.union(vsNew).distinct()
+      // new vs new: the batch's own collisions. Every new-vs-indexed pair
+      // holds one indexed id and every new-vs-new pair none, so the two
+      // sets are disjoint and each is deduplicated on its own
+      val vsNew = PairSurface.bandPairs(newBands, Seq("band", "bkey"), "doc_id")
+      val cands = vsOld.distinct().union(vsNew)
       val dups = Dedup.jaccardFor(cands, oldSh.union(newSh))
         .where(col("jaccard") >= minJaccard)
       writeBatchPartition(dups, s"$indexDir/dups")
@@ -463,12 +462,7 @@ object DedupStream {
     val keptBands = keepLatest(bands).persist()
     try {
       // rebuild verified pairs from the compacted index only
-      val cands = keptBands.as("a")
-        .join(keptBands.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc0"), col("b.doc_id").as("doc1"))
-        .distinct()
+      val cands = PairSurface.bandPairs(keptBands, Seq("band", "bkey"), "doc_id")
       val dups = Dedup.jaccardFor(cands, keptSh.select("doc_id", "sh"))
         .where(col("jaccard") >= minJaccard)
         .join(latest.select(col("doc_id").as("doc0"), col("batch_id").as("b0")), "doc0")
